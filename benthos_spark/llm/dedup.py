@@ -265,14 +265,15 @@ def minhash_lsh_pairs(df: DataFrame, text: str = "text",
     if hot_cap is not None:
         sz = F.when(
             F.size("__ids") > int(hot_cap),
-            F.raise_error(F.lit(
-                f"minhash_lsh_pairs: a bucket exceeds "
-                f"hot_cap={int(hot_cap)} members; its pair output is "
-                "quadratic in bucket size. Use "
+            F.raise_error(F.format_string(
+                "minhash_lsh_pairs: bucket band=%d band_key=%s has %d "
+                f"members, over hot_cap={int(hot_cap)}; its pair output "
+                "is quadratic in bucket size. Use "
                 "minhash_lsh_star_edges (linear output, identical "
                 "connectivity) for clustering, or pass a larger/None "
-                "hot_cap.")).cast("int")).otherwise(F.size("__ids"))
-    x = lists.select("__ids",
+                "hot_cap.", "band", "band_key", F.size("__ids")))
+            .cast("int")).otherwise(F.size("__ids"))
+    x = lists.select("band", "band_key", "__ids",
                      F.posexplode("__ids").alias("__i", "id_a"))
     return (x.select(
         "id_a",
@@ -664,245 +665,85 @@ def embedding_near_dup_pairs(df: DataFrame, vec: str = "embedding",
     return pairs.distinct()
 
 
-def connected_components_two_phase(edges: DataFrame, src: str = "id_a",
-                                   dst: str = "id_b",
-                                   max_iter: int = 40) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round fallback `connected_components`
-    documents for ADVERSARIAL graphs (long chains, high diameter),
-    where min-label propagation would need diameter rounds.
+def connected_components(edges: DataFrame, src: str = "id_a",
+                         dst: str = "id_b",
+                         max_iter: int = 50) -> DataFrame:
+    """Collapse near-dup candidate pairs into duplicate CLUSTERS:
+    (doc_id, component) where component = min node id reachable
+    through the pair graph.  The canonical doc to keep per cluster is
+    the component id itself.  Nodes whose only edges are self-loops
+    map to themselves; an empty edge list gives an empty result.
 
-    large-star: every node u links its larger neighbors to
-    m = min(N(u) ∪ {u}).  small-star: orient edges large→small, then
-    link all smaller neighbors (and u) to the minimum.  Alternating
-    the two converges to min-rooted stars in O(log n) rounds; each
-    round is one groupBy + one join on the node id, same shuffle
-    shape as a label-prop round, with localCheckpoint lineage
-    truncation.  Convergence = stable distinct-edge count + xxhash
-    sum (two O(1)-result aggregates).
+    Alternating large-star / small-star rounds (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond"), O(log n) rounds
+    on any graph, where min-label propagation needs diameter rounds.
+    With m(u) the minimum of u's closed neighborhood:
 
-    Returns (doc_id, component), component = min node id — identical
-    contract to connected_components.
+    * large-star: every node u links each LARGER neighbor to m(u);
+    * small-star: with edges oriented large→small, every node u links
+      itself and its smaller neighbors to m(u).
+
+    Both preserve connectivity, and the alternation converges to one
+    star per component whose center is the component minimum: every
+    other node then has exactly one edge, (node, min).  Each round is
+    ONE fused plan — a window `min` per node for large-star, another
+    for small-star, then `distinct` — ending in ONE eager
+    localCheckpoint.  The checkpoint truncates lineage so the plan
+    stays O(1) deep (iterative plans otherwise double per round and
+    stall Catalyst), and the fixpoint test rides it as an `observe`
+    (count, xxhash sum) of the edge set, so a round costs one Spark
+    action.  Running out of `max_iter` before the fixpoint raises:
+    the edge set is then not yet a forest of stars.
+
+    No round joins the edge set with itself.  localCheckpoint keeps
+    the size estimate of the plan it checkpointed, so a per-round
+    self-join (path compression, lab ← lab(lab)) multiplies the
+    estimate every round: on a 600-node path with shuffled ids
+    (local[4]) the planner's BigInteger size arithmetic took longer
+    each round, 25 s by round 5 and minutes in all.  A window only
+    carries its child's estimate forward.
     """
-    from pyspark.sql import Observation
+    from pyspark.sql import Observation, Window
 
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v")))
-    nodes = (e.select(F.col("u").alias("n"))
-             .union(e.select(F.col("v").alias("n"))).distinct()
-             .localCheckpoint(eager=True))
-    e = e.distinct().localCheckpoint(eager=True)
-    prev_sig = None
+    base = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .localCheckpoint(eager=True))
+    e = base.filter(F.col("u") != F.col("v"))
+    by_u = Window.partitionBy("u")
+    prev_sig = (0, None)  # an empty edge set is its own fixpoint
     for _ in range(max_iter):
-        # ---- large-star ----
-        sym = e.union(e.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
-        m = (sym.groupBy("u")
-             .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        e = (sym.join(m, "u")
-             .filter(F.col("v") > F.col("u"))
-             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-             .filter(F.col("u") != F.col("v"))
-             .distinct().localCheckpoint(eager=True))
-        # ---- small-star ----
-        oriented = e.select(F.greatest("u", "v").alias("u"),
-                            F.least("u", "v").alias("v"))
-        m = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        nbrs = oriented.join(m, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v"))
-        selfs = m.select(F.col("u"), F.col("m").alias("v"))
-        obs = Observation()  # convergence rides the checkpoint job (r6)
-        e = (nbrs.union(selfs)
+        # ---- large-star: (v, m(u)) for every neighbor v > u ----
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        ls = (sym.select("u", "v",
+                         F.least(F.min("v").over(by_u), "u").alias("m"))
+              .filter(F.col("v") > F.col("u"))
+              .select(F.col("v").alias("u"), F.col("m").alias("v")))
+        # ---- small-star: ls edges run large→small (u > v), so m(u)
+        # is min(v); link v and u to it ----
+        obs = Observation()
+        e = (ls.select("u", "v", F.min("v").over(by_u).alias("m"))
+             .select(F.inline(F.array(
+                 F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                 F.struct(F.col("u").alias("u"), F.col("m").alias("v")))))
              .filter(F.col("u") != F.col("v"))
              .distinct()
              .observe(obs, F.count(F.lit(1)).alias("n"),
                       F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
                       .alias("h"))
              .localCheckpoint(eager=True))
-        sig = obs.get
-        if (sig["n"], sig["h"]) == prev_sig:
+        sig = (obs.get["n"], obs.get["h"])
+        if sig == prev_sig:
             break
-        prev_sig = (sig["n"], sig["h"])
-    # stars: e = (child, root); roots/isolated nodes map to themselves
-    return (nodes.join(e, nodes.n == e.u, "left")
-            .select(F.col("n").alias("doc_id"),
-                    F.coalesce(F.col("v"), F.col("n"))
-                    .alias("component")))
-
-
-def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b",
-                         max_iter: int = 50,
-                         escalate_after: int = 20) -> DataFrame:
-    """Collapse near-dup candidate pairs into duplicate CLUSTERS:
-    (node, component) where component = min node id reachable through
-    the pair graph.  The canonical doc to keep per cluster is the
-    component id itself.
-
-    Min-label propagation WITH per-round path compression (hash-to-min
-    family): every round each node takes the minimum label over its
-    closed neighborhood, then labels compress one hop — lab ← lab(lab)
-    — so label information travels geometrically, not one hop per
-    round.  Plain propagation needs diameter rounds, and near-dup
-    graphs are NOT always shallow: the r6 open-vocabulary fixtures
-    chain buckets into diameter-27 components (28 rounds, 11.1 s at
-    sf1); with compression the same graph converges in 16 rounds /
-    7.7 s with bit-identical labels.  Compression preserves the
-    invariants (labels stay within the component and only decrease),
-    and each round stays ONE checkpointed two-join plan — compressing
-    twice per round without a checkpoint in between doubles the plan
-    depth per round and stalls Catalyst (measured: round 11 planned
-    for 117 s).  Swap in connected_components_two_phase (below) for
-    truly adversarial inputs (e.g. a single path of millions of
-    nodes), where the O(log n) alternating-star rounds win.
-
-    Scale notes: labels only ever decrease, so convergence is detected
-    by comparing sum(label) between rounds — an O(1)-result aggregate
-    that rides the round's eager-checkpoint job as an `observe` metric
-    (r6: the separate `.agg().first()` convergence job doubled the
-    per-round job count; Observation populates from the localCheckpoint
-    materialization, so each round is now ONE job).  localCheckpoint
-    truncates lineage each round so the plan stays O(1) deep (iterative
-    DataFrame plans otherwise double in size per round and stall
-    Catalyst).
-
-    AUTO-ESCALATION (r7): a graph still moving at round
-    `escalate_after` has real depth — compression handles diameter-27
-    fixtures in 16 rounds, so only adversarial shapes (million-node
-    paths) get here — and the remaining work switches itself to the
-    O(log n) alternating-star rounds: contract every node to its
-    current label (labels are within-component by invariant, so the
-    contracted graph has identical component structure and is SMALLER
-    by everything already collapsed), run
-    connected_components_two_phase on the contracted edges, then map
-    each node through its contraction label to the final component.
-    No caller ever has to pick the two-phase variant manually, and the
-    result stays bit-identical (component = min reachable node id).
-    If the loop falls off max_iter without reaching the sum fixpoint
-    (only possible when escalate_after ≥ max_iter), the labels may be
-    WRONG (upper bounds, not components) — warn loudly.
-    """
-    import warnings
-
-    from pyspark.sql import Observation
-
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=True)  # reused every round
-    # Round 1 directly from the edge list (r9): initial labels are
-    # lab(v) = v, so the first round's min over the closed
-    # neighborhood — min(u, min_{v∈N(u)} lab(v)) — is just
-    # min(u, min N(u)): the sym⋈labels join AND the labels-init
-    # distinct() exchange both drop out of the first (at 100 TB:
-    # largest) round.  Bit-identical labels by substitution; the
-    # duplicate (u, u) self rows collapse map-side in the partial min.
-    labels = (sym.select("u", F.col("v").alias("lab"))
-              .union(sym.select("u", F.col("u").alias("lab")))
-              .groupBy("u").agg(F.min("lab").alias("lab")))
-    obs0 = Observation()
-    labels = (labels.observe(obs0, F.sum(F.col("lab")
-                                         .cast("decimal(38,0)")).alias("s"))
-              .localCheckpoint(eager=True))
-    prev_sum = obs0.get["s"]
-    # NULL sum ⇔ zero label rows ⇔ no edges: already at the fixpoint
-    converged = prev_sum is None
-    compress_after = 3   # shallow clique graphs converge before this
-    for i in range(1, max_iter if not converged else 1):
-        # Plain (uncompressed) rounds — the common case, dense-clique
-        # graphs never leave it — use one join + one union-groupBy
-        # (r9): the join → groupBy → left-join-back shape paid a
-        # third exchange and an extra AQE stage per round for the
-        # SAME min — min(lab(u), min over neighbors lab(v)) — because
-        # unioning the node's own label row into the aggregate
-        # replaces the left join (nodes with no in-edges keep their
-        # label through the union row, exactly like the old
-        # coalesce).  Map-side partial aggregation combines the raw
-        # (u, nbr-lab) rows before the shuffle, so bytes shuffled do
-        # not grow.  Labels are bit-identical (min is min; measured
-        # 2.2 s → 1.0 s for the 3-round bench fixture, same sums).
-        # COMPRESSED rounds keep the join form: Spark 4.1's
-        # DeduplicateRelations throws `key not found: u#N` when the
-        # compression self-join duplicates a union subtree UNDER a
-        # CollectMetrics observe (reproduced minimally; fine without
-        # the observe) — the join form sidesteps the analyzer bug and
-        # both forms produce identical labels.
-        if i < compress_after:
-            nbr = (sym.alias("e")
-                   .join(labels.alias("l"), F.col("e.v") == F.col("l.u"))
-                   .select(F.col("e.u").alias("u"),
-                           F.col("l.lab").alias("lab")))
-            prop = (nbr.union(labels.select("u", "lab"))
-                    .groupBy("u").agg(F.min("lab").alias("lab")))
-        else:
-            nbr_min = (sym.alias("e")
-                       .join(labels.alias("l"),
-                             F.col("e.v") == F.col("l.u"))
-                       .groupBy(F.col("e.u").alias("u"))
-                       .agg(F.min("l.lab").alias("nbr_lab")))
-            prop = (labels.alias("l")
-                    .join(nbr_min.alias("n"), "u", "left")
-                    .select(F.col("u"),
-                            F.least(F.col("l.lab"),
-                                    F.coalesce(F.col("n.nbr_lab"),
-                                               F.col("l.lab")))
-                            .alias("lab")))
-        if i >= compress_after:
-            # path compression: lab ← lab(lab) — one extra self-join
-            # per round makes deep components converge geometrically
-            # (see docstring).  Adaptive: dense-clique graphs converge
-            # in ≤3 plain rounds and never pay the join; a graph still
-            # moving by round 3 has depth, and compression flips the
-            # remaining rounds from linear to logarithmic.  `left`
-            # keeps root labels (no row on the right) intact.
-            prop = (prop.alias("a")
-                    .join(prop.select(F.col("u").alias("cu"),
-                                      F.col("lab").alias("clab"))
-                          .alias("b"),
-                          F.col("a.lab") == F.col("b.cu"), "left")
-                    .select(F.col("a.u").alias("u"),
-                            F.least(F.col("a.lab"),
-                                    F.coalesce(F.col("b.clab"),
-                                               F.col("a.lab")))
-                            .alias("lab")))
-        obs = Observation()
-        labels = (prop.observe(obs,
-                               F.sum(F.col("lab").cast("decimal(38,0)"))
-                               .alias("s"))
-                  .localCheckpoint(eager=True))
-        # labels are monotone non-increasing → unchanged sum ⟺ fixpoint
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-        if i + 1 >= escalate_after and i + 1 < max_iter:
-            # still moving after escalate_after rounds: deep graph —
-            # contract to the label graph and finish in O(log n)
-            # alternating-star rounds (see docstring)
-            lu = labels.select(F.col("u"), F.col("lab").alias("lu"))
-            lv = labels.select(F.col("u").alias("v"),
-                               F.col("lab").alias("lv"))
-            contracted = (sym.join(lu, "u").join(lv, "v")
-                          .select(F.col("lu").alias("id_a"),
-                                  F.col("lv").alias("id_b"))
-                          .filter(F.col("id_a") != F.col("id_b"))
-                          .distinct())
-            comp = connected_components_two_phase(contracted)
-            return (labels.join(
-                comp.select(F.col("doc_id").alias("lab"),
-                            F.col("component")), "lab", "left")
-                .select(F.col("u").alias("doc_id"),
-                        F.coalesce(F.col("component"), F.col("lab"))
-                        .alias("component")))
-    if not converged:
-        warnings.warn(
-            f"connected_components exhausted max_iter={max_iter} "
-            "without reaching the label fixpoint — returned labels "
-            "are upper bounds, NOT components; raise max_iter or "
-            "lower escalate_after", RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("u").alias("doc_id"),
-                         F.col("lab").alias("component"))
+        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_iter={max_iter} rounds; raise max_iter")
+    # stars: e = (node, min) for every non-minimum node; the min of
+    # each node's own id and its star center is its component
+    return (base.select(F.col("u").alias("doc_id"), F.col("u").alias("c"))
+            .union(base.select("v", "v"))
+            .union(e)
+            .groupBy("doc_id").agg(F.min("c").alias("component")))
 
 
 def exact_substring_pairs(df: DataFrame, text: str = "text",

@@ -84,6 +84,16 @@ def _start_replay(spark: SparkSession, path: str,
     return q, name, dirs
 
 
+def _stop_replays(started: list, tmp_root: str) -> None:
+    """Stop the started drains and remove their dirs and `tmp_root`."""
+    for q, _name, dirs in started:
+        if q.isActive:
+            q.stop()
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(tmp_root, ignore_errors=True)
+
+
 def replay_parquet_many(spark: SparkSession,
                         specs: list[tuple],
                         await_secs: int = 600,
@@ -150,14 +160,22 @@ def replay_parquet_many(spark: SparkSession,
                                      tmp_root=tmp_root)
 
             with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-                started = list(pool.map(
-                    inheritable_thread_target(_start_one), specs))
+                futs = [pool.submit(inheritable_thread_target(_start_one),
+                                    spec) for spec in specs]
+            # keep every stream that did start, so a failed start
+            # still stops them below, then re-raise the first failure
+            started = [f.result() for f in futs if f.exception() is None]
+            for f in futs:
+                f.result()
         else:
             path, transform, output_mode = specs[0]
             started.append(_start_replay(spark, path, transform,
                                          output_mode,
                                          schema=schemas[path],
                                          tmp_root=tmp_root))
+    except BaseException:
+        _stop_replays(started, tmp_root)
+        raise
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -175,12 +193,7 @@ def replay_parquet_many(spark: SparkSession,
                     f"replay did not drain in {await_secs}s")
             tables.append(spark.table(name))
     finally:
-        for q, _name, dirs in started:
-            if q.isActive:
-                q.stop()
-            for d in dirs:
-                shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        _stop_replays(started, tmp_root)
     return tables
 
 

@@ -202,14 +202,48 @@ def test_connected_components_chain_and_clique(spark):
 
 
 def test_connected_components_iteration_cap(spark):
+    """Running out of max_iter before the fixpoint raises and names the
+    knob: the edge set is not yet stars, so no labels are returned."""
+    import pytest as _pytest
+
     from benthos_spark.llm.dedup import connected_components
-    # max_iter too small for the diameter → labels only partially
-    # propagated, but still a valid partial refinement (monotone)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a LONG, id_b LONG")
-    got = {r.doc_id: r.component
-           for r in connected_components(edges, max_iter=1).collect()}
-    assert got[2] == 1 and got[1] == 1
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)],
+                                  "id_a LONG, id_b LONG")
+    with _pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(chain, max_iter=1)
+
+
+def _union_find_components(edges):
+    """Reference: {node: min node id of its component}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _cc(spark, edges, **kw):
+    from benthos_spark.llm.dedup import connected_components
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    return {r.doc_id: r.component
+            for r in connected_components(df, **kw).collect()}
+
+
+def test_connected_components_self_loop_and_empty(spark):
+    """A node whose only edge is a self-loop maps to itself; an empty
+    edge list gives an empty result."""
+    edges = [(7, 7), (3, 3), (3, 4), (9, 8)]
+    assert _cc(spark, edges) == _union_find_components(edges) \
+        == {7: 7, 3: 3, 4: 3, 8: 8, 9: 8}
+    assert _cc(spark, []) == {}
 
 
 def test_repetition_signals(spark):
@@ -633,41 +667,27 @@ def test_langid_model_contract(spark):
     assert got[3] == "en"
 
 
-def test_connected_components_two_phase_matches_and_beats_diameter(spark):
-    """Large-star/small-star (Kiveris et al. 2014): equivalent labels
-    on general graphs, and O(log n) rounds where label propagation
-    needs diameter rounds — a 200-edge chain resolves to ONE component
-    within 12 alternations while 50 label-prop rounds cannot."""
+def test_connected_components_matches_union_find(spark):
+    """Alternating-star labels equal a union-find reference on a
+    seeded random sparse graph with many components, plus a clique, a
+    cycle, self-loops, and duplicate and reversed edges."""
     import random
 
-    from benthos_spark.llm.dedup import (connected_components,
-                                         connected_components_two_phase)
-
-    random.seed(7)
-    pairs = [(i, j) for i in range(10) for j in range(i + 1, 10)]
-    pairs += [(100 + i, 100 + (i + 1) % 15) for i in range(15)]
-    pairs += [(500, 501)]
-    random.shuffle(pairs)
-    e = spark.createDataFrame(pairs, "id_a long, id_b long")
-    lp = {(r.doc_id, r.component)
-          for r in connected_components(e).collect()}
-    tp = {(r.doc_id, r.component)
-          for r in connected_components_two_phase(e).collect()}
-    assert lp == tp and len({c for _, c in tp}) == 3
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(200)],
-                                  "id_a long, id_b long")
-    got = connected_components_two_phase(chain, max_iter=12).collect()
-    assert {r.component for r in got} == {0}
-    assert len(got) == 201
+    rnd = random.Random(7)
+    edges = [(rnd.randrange(400), rnd.randrange(400)) for _ in range(300)]
+    edges += [(b, a) for a, b in edges[:40]] + edges[40:60]
+    edges += [(i, j) for i in range(500, 506) for j in range(i + 1, 506)]
+    edges += [(600 + i, 600 + (i + 1) % 9) for i in range(9)]
+    edges += [(5, 5), (700, 700)]
+    rnd.shuffle(edges)
+    ref = _union_find_components(edges)
+    assert _cc(spark, edges) == ref and len(set(ref.values())) > 20
 
 
-def test_connected_components_compression_solves_deep_chains(spark):
-    """r6 regression pin for adaptive path compression: a 120-node
-    path needs 120 plain label-prop rounds (> max_iter=50 would
-    return WRONG labels without compression); with lab←lab(lab)
-    kicking in after round 3 the label horizon grows geometrically
-    and the chain resolves to one component well inside the cap."""
+def test_connected_components_resolves_120_node_path(spark):
+    """A 120-node path needs 120 min-label propagation rounds, more
+    than max_iter=50; alternating-star rounds need O(log n), so the
+    path resolves to one component well inside the cap."""
     from benthos_spark.llm.dedup import connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(120)],
@@ -677,15 +697,9 @@ def test_connected_components_compression_solves_deep_chains(spark):
     assert len(got) == 121
 
 
-def test_connected_components_auto_escalates_to_two_phase(spark):
-    """r7: a graph still moving at round `escalate_after` switches
-    itself to the alternating-star rounds — no caller ever has to pick
-    connected_components_two_phase manually.  A 600-node path is far
-    past what compressed propagation finishes in the default cap
-    (observed ≈2 extra depth-hops/round → ~300 rounds), yet it must
-    resolve to ONE component with bit-identical min-id labels inside
-    max_iter=50.  escalate_after=6 keeps the test fast; the default
-    (20) only fires on shapes the bench fixtures never produce."""
+def test_connected_components_resolves_600_node_path(spark):
+    """A 600-node path resolves to ONE component with min-id labels
+    inside max_iter=50, and no RuntimeWarning is raised on the way."""
     import warnings
 
     from benthos_spark.llm.dedup import connected_components
@@ -693,29 +707,30 @@ def test_connected_components_auto_escalates_to_two_phase(spark):
     chain = spark.createDataFrame([(i, i + 1) for i in range(600)],
                                   "id_a long, id_b long")
     with warnings.catch_warnings():
-        # escalation must NOT trip the exhaustion warning
         warnings.simplefilter("error", RuntimeWarning)
-        got = connected_components(chain, max_iter=50,
-                                   escalate_after=6).collect()
+        got = connected_components(chain, max_iter=50).collect()
     assert {r.component for r in got} == {0}
     assert len(got) == 601
 
 
-def test_connected_components_warns_on_cap_exhaustion(spark):
-    """ADVICE r6: falling off max_iter without the sum fixpoint used
-    to return possibly-wrong labels SILENTLY.  With escalation
-    disabled (escalate_after ≥ max_iter) the exhaustion must warn."""
-    import warnings
+def test_connected_components_5000_node_shuffled_path(spark):
+    """A 5000-node path with shuffled ids converges under the default
+    max_iter and matches union-find.  The wall bound catches a return
+    of plan-estimate blow-up: with a per-round labels self-join the
+    size estimate multiplied every round and a 600-node shuffled path
+    took minutes of planning."""
+    import random
+    import time
 
-    import pytest as _pytest
-
-    from benthos_spark.llm.dedup import connected_components
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(40)],
-                                  "id_a long, id_b long")
-    with _pytest.warns(RuntimeWarning, match="exhausted max_iter"):
-        connected_components(chain, max_iter=3,
-                             escalate_after=99).collect()
+    ids = list(range(5000))
+    random.Random(11).shuffle(ids)
+    edges = [(ids[i], ids[i + 1]) for i in range(4999)]
+    t0 = time.monotonic()
+    got = _cc(spark, edges)
+    wall = time.monotonic() - t0
+    assert got == _union_find_components(edges)
+    assert set(got.values()) == {0}
+    assert wall < 60, f"5000-node path took {wall:.1f} s"
 
 
 def test_dsir_selects_target_like_docs(spark):

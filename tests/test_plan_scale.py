@@ -349,12 +349,13 @@ def test_connected_components_one_job_per_round(spark):
     Spark action (the eager localCheckpoint; the convergence metric
     rides it as an `observe`).  The pre-r6 shape ran a SEPARATE
     .agg().first() action per round — with AQE disabled that doubles
-    the job count, so pinning the exact count catches it.  The clique
-    converges in exactly 2 rounds (one change + one confirm):
-    1 sym-checkpoint job + 2 round jobs = 3.  (AQE is turned off for
-    the measurement only because it splits one action into several
-    stage-materialization jobs, which would make the count
-    environment-sensitive.)"""
+    the job count, so pinning the exact count catches it.  With
+    alternating-star rounds the clique takes exactly 2 rounds: round
+    1 turns it into the star rooted at 0, round 2 finds the same edge
+    set (the fixpoint).  1 edge-checkpoint job + 2 round jobs = 3.
+    (AQE is turned off for the measurement only because it splits one
+    action into several stage-materialization jobs, which would make
+    the count environment-sensitive.)"""
     from benthos_spark.llm.dedup import connected_components
 
     old = spark.conf.get("spark.sql.adaptive.enabled")

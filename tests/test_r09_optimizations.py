@@ -380,15 +380,14 @@ def test_fused_gram_counts_match_separate_tables(spark):
     assert bi_f == bi_ref
 
 
-# ---------------------------------------------------------------- CC round
-# shapes: union-groupBy rounds and compressed join rounds agree
+# ---------------------------------------------------------------- CC on
+# a deep graph mixed with shallow components
 
 
 def test_cc_union_rounds_match_on_deep_graph(spark):
     from benthos_spark.llm.dedup import connected_components
 
-    # a long path (forces compressed rounds past compress_after=3)
-    # plus two cliques and isolated self-edges
+    # a long path plus a clique and an isolated edge
     edges = [(i, i + 1) for i in range(40)]
     edges += [(100, 101), (101, 102), (100, 102)]
     edges += [(200, 201)]

@@ -103,10 +103,9 @@ def test_langid_classifier_lone_surrogate():
 
 
 def test_minhash_hot_cap_raises_with_pointer(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql.utils import PythonException
-
-    from benthos_spark.llm.dedup import minhash_lsh_pairs
+    from benthos_spark.llm.dedup import (_banded_signatures_arrow,
+                                         minhash_lsh_pairs,
+                                         shingle_hash_frame)
 
     # one mega-bucket: identical text → identical signatures
     docs = spark.createDataFrame(
@@ -115,6 +114,11 @@ def test_minhash_hot_cap_raises_with_pointer(spark):
     with pytest.raises(Exception) as ei:
         minhash_lsh_pairs(docs, hot_cap=10).collect()
     assert "star_edges" in str(ei.value)
+    # the error names the offending bucket: its band and band key
+    banded = _banded_signatures_arrow(
+        shingle_hash_frame(docs, "text", "doc_id", 3), "doc_id", 4, 4)
+    keys = {(r.band, r.band_key) for r in banded.collect()}
+    assert any(f"band={b} band_key={k} " in str(ei.value) for b, k in keys)
     # under the cap: same pair set as uncapped
     a = {tuple(r) for r in
          minhash_lsh_pairs(docs, hot_cap=64).collect()}

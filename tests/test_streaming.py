@@ -138,3 +138,40 @@ def test_replay_parquet_equals_batch(spark):
         assert single.count() >= 1
     finally:
         shutil.rmtree(src, ignore_errors=True)
+
+
+def test_replay_many_failed_start_cleans_up(spark, tmp_path, monkeypatch):
+    """A start that fails while the others run concurrently must not
+    leak: the drains that did start are stopped, and their dirs and
+    the shared temp root are removed, before the error propagates."""
+    import threading
+
+    import pytest
+
+    from benthos_spark.streaming import replay as replay_mod
+
+    src = tmp_path / "src"
+    _events(spark).coalesce(1).write.parquet(str(src))
+    root = tmp_path / "replay_root"
+    root.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_TMP", str(root))
+    real_start = replay_mod._start_replay
+    calls = []
+    lock = threading.Lock()
+
+    def flaky_start(*args, **kwargs):
+        with lock:
+            calls.append(1)
+            n = len(calls)
+        if n == 2:
+            raise RuntimeError("injected start failure")
+        return real_start(*args, **kwargs)
+
+    monkeypatch.setattr(replay_mod, "_start_replay", flaky_start)
+    specs = [(str(src), lambda s: s, "append")] * 3
+    with pytest.raises(RuntimeError, match="injected start failure"):
+        replay_mod.replay_parquet_many(spark, specs)
+    assert len(calls) == 3
+    assert not [q for q in spark.streams.active
+                if (q.name or "").startswith("bs_replay_")]
+    assert not list(root.glob("bs_replay_root_*"))

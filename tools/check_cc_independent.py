@@ -25,10 +25,11 @@ Usage: python tools/check_cc_independent.py [sf_dir]
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -41,10 +42,8 @@ def main() -> int:
     import __spark_entry__ as entry
 
     sql = entry.oracle_sql()["dedup_connected_components"]
-    head = "WITH RECURSIVE pairs AS ("
-    start = sql.index(head) + len(head)
-    end = sql.index("),\nedges AS")
-    pairs_sql = sql[start:end]
+    pairs_sql = re.search(r"WITH\s+RECURSIVE\s+pairs\s+AS\s*\((.*?)\)\s*,"
+                          r"\s*edges\s+AS\b", sql, re.S | re.I).group(1)
 
     con = duckdb.connect()
     con.execute("SET memory_limit = '"
@@ -92,9 +91,11 @@ def main() -> int:
     # --- canonical winner rule over ALL documents ---
     doc_ids = nc["doc_id"].astype(np.int64)
     nch = nc["n_chars"].astype(np.int64)
-    pos = np.minimum(np.searchsorted(ids, doc_ids), len(ids) - 1)
-    in_graph = ids[pos] == doc_ids
-    comp_all = np.where(in_graph, comp[pos], doc_ids)
+    if len(ids):
+        pos = np.minimum(np.searchsorted(ids, doc_ids), len(ids) - 1)
+        comp_all = np.where(ids[pos] == doc_ids, comp[pos], doc_ids)
+    else:  # no edges: every document is a canonical singleton
+        comp_all = doc_ids
     order = np.lexsort((doc_ids, -nch))  # n_chars DESC, doc_id ASC
     _, first_pos = np.unique(comp_all[order], return_index=True)
     is_canon = np.zeros(len(doc_ids), dtype=np.int64)
