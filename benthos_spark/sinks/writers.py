@@ -82,7 +82,15 @@ def write_stream_file(df: DataFrame, path: str, checkpoint: str,
                       partition_by: list[str] | None = None):
     """Streaming file sink with checkpointed exactly-once file commits
     (the upgrade over the reference's at-least-once ack chain,
-    SURVEY §2.5)."""
+    SURVEY §2.5).
+
+    Each micro-batch commits the offset log, the commit log, the
+    sink's file log and any state-store deltas under `checkpoint`.  A
+    session from `get_spark` on a local master writes them through
+    Spark's FileSystem-based checkpoint file manager: Spark's default
+    FileContext manager forks a `readlink` per rename and status check
+    on a host without libhadoop, and on the local filesystem both
+    managers rename the same way (exists check, then rename)."""
     w = (df.writeStream.format(fmt).outputMode("append")
          .option("path", path).option("checkpointLocation", checkpoint))
     if partition_by:

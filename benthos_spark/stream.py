@@ -235,6 +235,10 @@ def _build_input(spark: SparkSession, conf: dict,
             # watch-directory streaming mode; schema required (schema
             # inference would be an extra listing pass per trigger)
             reader = spark.readStream.schema(spec["schema"])
+            # the file source takes new files oldest modification time
+            # first, so `max_files_per_trigger` batches follow mtime,
+            # not file name: copy inputs with their mtimes kept
+            # (`cp -a`, shutil.copy2) or the batch order changes
             if "max_files_per_trigger" in spec:
                 reader = reader.option("maxFilesPerTrigger",
                                        int(spec["max_files_per_trigger"]))

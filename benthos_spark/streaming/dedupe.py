@@ -221,12 +221,14 @@ def replay_minhash_dedupe(spark, path: str, text: str = "text",
     # r10 measured the fixture drain at 2.6 s vs 3.4 s under the
     # fixed 1024 (463 identical rows at every setting tried).
     try:
-        import pyarrow.parquet as _pq
-        n_docs = _pq.ParquetFile(path).metadata.num_rows
+        import pyarrow.dataset as _ds
+        # sums the footers' row counts, of one file or of every part
+        # file in a directory (names starting `_`/`.` are skipped)
+        n_docs = _ds.dataset(path, format="parquet").count_rows()
         shards = max(16, min(1 << 20, (bands * n_docs) // 10_000))
     except Exception:
-        # directory corpus / unreadable footer: keep the unbounded-
-        # stream default rather than guessing small
+        # unreadable footer or a path pyarrow cannot open: keep the
+        # unbounded-stream default rather than guessing small
         shards = 1024
 
     # 16 state partitions: the sharded operator makes ≤`shards` group

@@ -21,36 +21,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _replay_tmp_root() -> str | None:
-    """Root for the replay's throwaway checkpoint/source dirs.  A
-    bounded AvailableNow drain never restarts, so its checkpoint has
-    no durability requirement — prefer tmpfs (/dev/shm) when present:
-    the state-store + offset/commit-log fsyncs are ~9% of the gate's
-    wall on disk and free in memory.  Production streams pass their
-    own durable checkpointLocation and never come through here.
-
-    tmpfs is typically capped at 50% of RAM, so /dev/shm is only used
-    when it has ≥1 GiB free (replay checkpoints are offset logs + HDFS
-    state-store deltas — MBs for the gate's drains; the GiB bar leaves
-    two orders of magnitude of headroom before an ENOSPC could beat a
-    disk run).  `SPARK_GRAFT_REPLAY_TMP=<dir>` forces a specific root;
-    `SPARK_GRAFT_REPLAY_TMP=disk` forces the system temp dir."""
-    import os
-
-    override = os.environ.get("SPARK_GRAFT_REPLAY_TMP")
-    if override:
-        return None if override == "disk" else override
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        try:
-            st = os.statvfs(shm)
-            if st.f_bavail * st.f_frsize >= 1 << 30:
-                return shm
-        except OSError:
-            pass
-    return None
-
-
 def _start_replay(spark: SparkSession, path: str,
                   transform: Callable[[DataFrame], DataFrame],
                   output_mode: str, schema=None,
@@ -133,8 +103,7 @@ def replay_parquet_many(spark: SparkSession,
     # per DISTINCT source path (a five-mechanism gate on one table
     # paid five identical schema jobs), one shared temp root
     schemas: dict[str, object] = {}
-    tmp_root = tempfile.mkdtemp(prefix="bs_replay_root_",
-                                dir=_replay_tmp_root())
+    tmp_root = tempfile.mkdtemp(prefix="bs_replay_root_")
     started = []
     try:
         for path, _tf, _m in specs:

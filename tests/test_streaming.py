@@ -154,7 +154,7 @@ def test_replay_many_failed_start_cleans_up(spark, tmp_path, monkeypatch):
     _events(spark).coalesce(1).write.parquet(str(src))
     root = tmp_path / "replay_root"
     root.mkdir()
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_TMP", str(root))
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
     real_start = replay_mod._start_replay
     calls = []
     lock = threading.Lock()
@@ -175,3 +175,118 @@ def test_replay_many_failed_start_cleans_up(spark, tmp_path, monkeypatch):
     assert not [q for q in spark.streams.active
                 if (q.name or "").startswith("bs_replay_")]
     assert not list(root.glob("bs_replay_root_*"))
+
+
+def test_checkpoint_file_manager_pinned(spark, tmp_path):
+    """A local session commits stream checkpoints through the
+    FileSystem-based manager (the FileContext one forks a `readlink`
+    per rename and status check without libhadoop), and an explicit
+    `get_spark` conf still overrides it.  Creating the manager loads
+    the configured class, so a wrong class path fails here too."""
+    from benthos_spark.session import get_spark
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}")
+
+    def manager_class():
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        return (getattr(jvm, pkg + "CheckpointFileManager")
+                .create(path, conf).getClass().getName())
+
+    assert manager_class() == pkg + "FileSystemBasedCheckpointFileManager"
+    default = spark.conf.get(key)
+    other = pkg + "FileContextBasedCheckpointFileManager"
+    try:
+        assert get_spark("tests", **{key: other}) is spark
+        assert manager_class() == other
+    finally:
+        spark.conf.set(key, default)
+    assert manager_class() == pkg + "FileSystemBasedCheckpointFileManager"
+
+
+def _window_config(src: str, out: str) -> str:
+    return f"""
+input:
+  file:
+    paths: ["{src}"]
+    format: parquet
+    stream: true
+    max_files_per_trigger: 1
+    schema: "ts TIMESTAMP, event_type STRING, value DOUBLE"
+pipeline:
+  processors:
+    - window:
+        ts: ts
+        duration: 5 minutes
+        watermark: 60 seconds
+        keys: [event_type]
+        aggs: {{n: count, vmax: "max:value"}}
+output:
+  file:
+    path: "{out}"
+    checkpoint: "{out}.checkpoint"
+    timeout: 120
+"""
+
+
+def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
+    """A YAML file → file window stream stopped after 3 files and
+    restarted on the same checkpoint once 3 more arrive writes exactly
+    the windows of an uninterrupted run over all 6: the offset, commit
+    and state-store logs resume the stream with no window written
+    twice and none lost."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from benthos_spark.stream import run_stream
+
+    files = tmp_path / "files"
+    files.mkdir()
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    for i in range(6):
+        # file i covers minutes [10i, 10i + 10): two 5-minute windows
+        # per event type, none late for the next file's watermark
+        ts = [t0 + dt.timedelta(minutes=10 * i, seconds=3 * j)
+              for j in range(200)]
+        f = files / f"part-{i}.parquet"
+        pq.write_table(pa.table({
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+            "event_type": [("a", "b", "c")[j % 3] for j in range(200)],
+            "value": [float(i * 1000 + j) for j in range(200)]}), f)
+        # the stream reads files oldest modification time first
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    names = sorted(os.listdir(files))
+
+    def windows(out):
+        rows = [(str(r.window.start), r.event_type, r.n, r.vmax)
+                for r in spark.read.parquet(str(out)).collect()]
+        assert len(rows) == len({r[:2] for r in rows})
+        return sorted(rows)
+
+    whole_src, whole_out = tmp_path / "whole_src", tmp_path / "whole_out"
+    whole_src.mkdir()
+    for n in names:
+        shutil.copy2(files / n, whole_src / n)
+    run_stream(spark, _window_config(whole_src, whole_out))
+
+    src, out = tmp_path / "src", tmp_path / "out"
+    src.mkdir()
+    for n in names[:3]:
+        shutil.copy2(files / n, src / n)
+    run_stream(spark, _window_config(src, out))
+    first = windows(out)
+    for n in names[3:]:
+        shutil.copy2(files / n, src / n)
+    run_stream(spark, _window_config(src, out))
+
+    whole = windows(whole_out)
+    # 6 files × 2 windows × 3 types; the watermark holds back the last
+    # file's second window of each type
+    assert len(whole) == 33
+    assert 0 < len(first) < len(whole)
+    assert windows(out) == whole

@@ -293,3 +293,40 @@ def test_drain_equals_batch_on_megabucket_fixture(spark):
     # the mega-bucket population: a substantial share of the corpus
     # dedupes away (the uniform sf fixtures sit far below this)
     assert len(batch) / total > 0.15, (len(batch), total)
+
+
+def test_replay_shards_sized_from_directory_footers(spark, tmp_path,
+                                                    monkeypatch):
+    """`replay_minhash_dedupe` sizes `shards` from the corpus's row
+    count in the parquet footers.  One file and the same rows split
+    over two files in a directory must give the same `shards`; a
+    directory used to fall back to the unbounded default (1024)."""
+    import pyarrow as pa
+
+    from benthos_spark.streaming import dedupe
+
+    n = 60_000
+    tbl = pa.table({"doc_id": pa.array(range(n), pa.int64()),
+                    "text": [f"doc {i}" for i in range(n)]})
+    one = tmp_path / "one.parquet"
+    pq.write_table(tbl, one)
+    split = tmp_path / "split"
+    split.mkdir()
+    pq.write_table(tbl.slice(0, n // 3), split / "part-0.parquet")
+    pq.write_table(tbl.slice(n // 3), split / "part-1.parquet")
+
+    class _Captured(Exception):
+        pass
+
+    shards = []
+
+    def capture(stream, **kwargs):
+        shards.append(kwargs["shards"])
+        raise _Captured
+
+    monkeypatch.setattr(dedupe, "streaming_minhash_dup_marks", capture)
+    for path in (one, split):
+        with pytest.raises(_Captured):
+            dedupe.replay_minhash_dedupe(spark, str(path))
+    # bands (4) × rows // 10k
+    assert shards == [24, 24]
