@@ -4029,7 +4029,7 @@ _DSIR_K = 100
 
 
 def _sql_dsir_gramstream() -> str:
-    """Unigram+bigram stream mirroring llm.sampling.dsir_grams."""
+    """Unigram+bigram stream mirroring llm.grams._dsir_doc_grams."""
     bigrams = ("CASE WHEN len(toks) >= 2 THEN "
                "list_transform(range(1, len(toks)), "
                "i -> toks[i] || ' ' || toks[i+1]) "

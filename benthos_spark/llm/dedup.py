@@ -70,10 +70,9 @@ def token_hash_frame(df: DataFrame, text: str = "text",
     from benthos_spark.operators.scale import ensure_scan_parallelism
     # NULL text coalesces to '' BEFORE hashing: otherwise split(null)
     # propagates a null `th`, the whole-doc fold yields a null shingle,
-    # and the Arrow kernel's np.asarray(..., int64) would hit a
-    # platform-defined NaN cast — the Column and Arrow paths would
-    # disagree on null docs.  With the coalesce no null ever reaches
-    # either kernel and both paths stay bit-identical.
+    # and the signature kernel's np.asarray(..., int64) would hit a
+    # platform-defined NaN cast.  With the coalesce no null reaches the
+    # kernel: null docs hash like the empty document.
     toks = F.split(F.trim(F.coalesce(F.col(text), F.lit(""))), r"\s+")
     return materialize_cols(
         ensure_scan_parallelism(df.select(F.col(id_col), F.col(text))),
@@ -124,41 +123,17 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Distinct portable hashes of the document's n-word shingles."""
-    return F.array_distinct(
-        F.transform(word_shingles(text, n), hash48))
-
-
-def signature_from_hashes(sh: Column,
-                          perms: list[tuple[int, int]] = MINHASH_PERMS) -> Column:
-    """MinHash signature over a (materialized) shingle-hash array: per
-    permutation i, min over hashes of (a_i*h + b_i) mod p."""
-
-    def perm_min(a: int, b: int) -> Column:
-        return F.array_min(F.transform(
-            sh, lambda h: (h * a + b) % HASH_PRIME))
-
-    return F.array(*[perm_min(a, b) for a, b in perms])
-
-
-def minhash_signature(text: Column, n: int = 3,
-                      perms: list[tuple[int, int]] = MINHASH_PERMS) -> Column:
-    """MinHash signature straight from text (convenience form; for bulk
-    use materialize shingle_hashes first — see minhash_lsh_pairs)."""
-    return signature_from_hashes(shingle_hashes(text, n), perms)
-
-
 def _banded_signatures_arrow(hashed: DataFrame, id_col: str,
                              bands: int, r: int) -> DataFrame:
     """(id, band, band_key) from the shingle-hash frame via one
     Arrow-batched numpy kernel: all 16 permutation minima per document
     come out of a single (m_shingles × 16) int64 broadcast-multiply —
-    the pure-Column form evaluates 16 interpreted array_min(transform)
-    folds per row (~3× slower at sf1).  Integer math is identical:
-    h < P ≈ 2^30 and a ≤ 31, so h·a+b stays far inside int64, and
-    numpy's % matches the JVM's for non-negative operands — the band
-    keys are bit-identical to the Column path (equivalence-tested)."""
+    a Column form evaluates 16 interpreted array_min(transform) folds
+    per row (minhash_lsh_pairs at sf1 on 4 vCPU: 12.4 s as Columns,
+    6.6 s with this kernel).  Integer math is exact: h < P ≈ 2^30 and
+    a ≤ 31, so h·a+b stays far inside int64, and numpy's % matches the
+    JVM's and DuckDB's for non-negative operands — the band keys equal
+    the oracle SQL's and a pure-Python reference's (tests/test_llm.py)."""
     import pandas as pd
 
     A = [a for a, _ in MINHASH_PERMS]
@@ -186,31 +161,9 @@ def _banded_signatures_arrow(hashed: DataFrame, id_col: str,
         gen, schema=f"{id_col} {id_t}, band int, band_key string")
 
 
-def _banded_signatures_column(hashed: DataFrame, id_col: str,
-                              bands: int, r: int) -> DataFrame:
-    """Pure-Column band keys: (id, band, band_key) — same values as the
-    Arrow kernel.  The repartition between shingle-hashing and
-    signature/band projection is a deliberate materialization barrier
-    (see minhash_lsh_pairs docstring)."""
-    sig_df = hashed.select(
-        F.col(id_col),
-        signature_from_hashes(F.col("__sh")).alias("__sig")) \
-        .repartition(id_col)
-    sig = F.col("__sig")
-    return sig_df.select(
-        F.col(id_col),
-        F.posexplode(F.array(*[
-            F.array_join(F.transform(F.slice(sig, i * r + 1, r),
-                                     lambda x: x.cast("string")), "-")
-            for i in range(bands)
-        ])).alias("band", "band_key"),
-    )
-
-
 def minhash_lsh_pairs(df: DataFrame, text: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       bands: int = 4,
-                      arrow_kernel: bool = True,
                       hot_cap: int | None = 100_000) -> DataFrame:
     """Candidate near-dup pairs via banded LSH over MinHash signatures.
 
@@ -230,21 +183,12 @@ def minhash_lsh_pairs(df: DataFrame, text: str = "text",
     the linear-output pointer is the design answer.  `hot_cap=None`
     disables the guard.
 
-    `arrow_kernel=True` (default) computes the 16 permutation minima in
-    one numpy broadcast per document (map-only, Arrow-batched);
-    `False` keeps the pure-Column form — same values either way.  In
-    the Column form, the repartition between shingle-hashing and
-    signature/band projection is a deliberate materialization barrier:
-    CollapseProject would otherwise inline the shingle-hash array into
-    all 16 permutation expressions and every band key, recomputing it
-    ~64× per row.  The shuffled payload is just (id, 16 longs) — tiny.
+    The 16 permutation minima come out of one numpy broadcast per
+    document (_banded_signatures_arrow: map-only, Arrow-batched).
     """
     r = len(MINHASH_PERMS) // bands
-    hashed = shingle_hash_frame(df, text, id_col, n)
-    if arrow_kernel:
-        banded = _banded_signatures_arrow(hashed, id_col, bands, r)
-    else:
-        banded = _banded_signatures_column(hashed, id_col, bands, r)
+    banded = _banded_signatures_arrow(
+        shingle_hash_frame(df, text, id_col, n), id_col, bands, r)
     # Pair generation off ONE aggregation of the bucket key, not a
     # self-join (r9) — the join form duplicated the entire banded
     # pipeline (scan + shingle HOFs + signature kernel ran TWICE, once
@@ -284,8 +228,7 @@ def minhash_lsh_pairs(df: DataFrame, text: str = "text",
 
 def minhash_lsh_star_edges(df: DataFrame, text: str = "text",
                            id_col: str = "doc_id", n: int = 3,
-                           bands: int = 4,
-                           arrow_kernel: bool = True) -> DataFrame:
+                           bands: int = 4) -> DataFrame:
     """Linear-output LSH dedup edges: per (band, bucket) link every
     member to the bucket MINIMUM id instead of emitting all C(m,2)
     member pairs.  Connectivity — and therefore connected components,
@@ -310,10 +253,8 @@ def minhash_lsh_star_edges(df: DataFrame, text: str = "text",
     from pyspark.sql import Window
 
     r = len(MINHASH_PERMS) // bands
-    hashed = shingle_hash_frame(df, text, id_col, n)
-    banded = (_banded_signatures_arrow(hashed, id_col, bands, r)
-              if arrow_kernel else
-              _banded_signatures_column(hashed, id_col, bands, r))
+    banded = _banded_signatures_arrow(
+        shingle_hash_frame(df, text, id_col, n), id_col, bands, r)
     root = F.min(id_col).over(Window.partitionBy("band", "band_key"))
     return (banded.select(root.alias("id_a"),
                           F.col(id_col).alias("id_b"))
@@ -748,8 +689,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
 
 def exact_substring_pairs(df: DataFrame, text: str = "text",
                           id_col: str = "doc_id", k: int = 20,
-                          max_df: int | None = 16,
-                          arrow_kernel: bool = True) -> DataFrame:
+                          max_df: int | None = 16) -> DataFrame:
     """Exact-substring overlap pairs (the Lee et al. 'Deduplicating
     Training Data' suffix-array family, re-expressed for Spark): two
     documents pair when they share at least one contiguous run of `k`
@@ -766,27 +706,12 @@ def exact_substring_pairs(df: DataFrame, text: str = "text",
     long verbatim overlap; hash collisions are the same accepted
     48-bit risk the decontamination op documents.
 
-    arrow_kernel=True (default) builds the distinct per-doc k-gram
-    hashes in one mapInPandas pass (llm.grams.gram_hash_stream with
-    per_doc_distinct) — bit-identical to the Column path AND one fewer
-    shuffle: the per-doc set replaces the `.distinct()` exchange, since
-    mapInPandas never splits a document across batches."""
-    if arrow_kernel:
-        from benthos_spark.llm.grams import gram_hash_stream
-        grams = gram_hash_stream(df, text, id_col, n=k,
-                                 per_doc_distinct=True)
-    else:
-        from benthos_spark.llm.text import materialize_cols, tokens, \
-            word_ngrams
-        from benthos_spark.operators.scale import ensure_scan_parallelism
-        toks = materialize_cols(
-            ensure_scan_parallelism(df.select(F.col(id_col), F.col(text))),
-            __toks=tokens(F.col(text)))
-        grams = (toks.select(F.col(id_col),
-                             F.explode(word_ngrams(F.col("__toks"), k))
-                             .alias("g"))
-                 .select(F.col(id_col), hash48(F.col("g")).alias("gh"))
-                 .distinct())
+    The distinct per-doc k-gram hashes come out of one mapInPandas
+    pass (llm.grams.gram_hash_stream with per_doc_distinct): the
+    per-doc set replaces a `.distinct()` exchange, since mapInPandas
+    never splits a document across batches."""
+    from benthos_spark.llm.grams import gram_hash_stream
+    grams = gram_hash_stream(df, text, id_col, n=k, per_doc_distinct=True)
     posting = (grams.groupBy("gh")
                .agg(F.array_sort(F.collect_list(F.col(id_col)))
                     .alias("ds"))
@@ -805,8 +730,7 @@ def exact_substring_pairs(df: DataFrame, text: str = "text",
 
 def ngram_contamination(train: DataFrame, eval_df: DataFrame,
                         text: str = "text", id_col: str = "doc_id",
-                        n: int = 5,
-                        arrow_kernel: bool = True) -> DataFrame:
+                        n: int = 5) -> DataFrame:
     """Eval-set decontamination (the GPT-3 appendix-C / Llama recipe):
     flag training documents that share any word n-gram with a held-out
     benchmark corpus, so they can be dropped before pretraining.
@@ -818,24 +742,12 @@ def ngram_contamination(train: DataFrame, eval_df: DataFrame,
     semi-join: no shuffle of the corpus, filter evaluated at the scan.
     Returns (doc_id, n_shared_grams) for contaminated docs only.
 
-    arrow_kernel=True (default) hashes grams in one mapInPandas pass
-    per side (llm.grams.gram_hash_stream) — same 48-bit values, no
-    interpreted per-gram lambdas."""
-    from benthos_spark.llm.text import materialize_cols, tokens, word_ngrams
+    Each side's grams are hashed in one mapInPandas pass
+    (llm.grams.gram_hash_stream) — no interpreted per-gram lambdas."""
+    from benthos_spark.llm.grams import gram_hash_stream
 
-    def gram_hashes(df: DataFrame) -> DataFrame:
-        if arrow_kernel:
-            from benthos_spark.llm.grams import gram_hash_stream
-            return gram_hash_stream(df, text, id_col, n=n)
-        toks = materialize_cols(df.select(F.col(id_col), F.col(text)),
-                                __toks=tokens(F.col(text)))
-        return (toks.select(
-            F.col(id_col),
-            F.explode(word_ngrams(F.col("__toks"), n)).alias("g"))
-            .select(id_col, hash48(F.col("g")).alias("gh")))
-
-    ev = gram_hashes(eval_df).select("gh").distinct()
-    return (gram_hashes(train)
+    ev = gram_hash_stream(eval_df, text, id_col, n=n).select("gh").distinct()
+    return (gram_hash_stream(train, text, id_col, n=n)
             .join(F.broadcast(ev), "gh")
             .groupBy(id_col)
             .agg(F.countDistinct("gh").alias("n_shared_grams")))
@@ -1036,46 +948,29 @@ def paragraph_dedup(df: DataFrame, text: str = "text",
 
 # ------------------------------------------------------------ bloom
 
-def bloom_positions(gram: Column, m: int, k: int) -> Column:
-    """k bit positions in [0, m) for one n-gram — k independent
-    md5-derived hashes (salted by probe index).  Engine-portable and
-    codegen-able; the classic Bloom construction with explicit salts
-    instead of the two-hash Kirsch-Mitzenmacher trick so the oracle
-    SQL is a literal mirror."""
-    return F.array(*[
-        hash48(F.concat(F.lit(f"bl{i}#"), gram)) % m for i in range(k)])
-
-
 def bloom_build(reference: DataFrame, text: str = "text",
-                n: int = 5, m: int = 1 << 18, k: int = 3,
-                arrow_kernel: bool = True) -> DataFrame:
+                n: int = 5, m: int = 1 << 18, k: int = 3) -> DataFrame:
     """Build the Bloom set from a reference corpus: the DISTINCT bit
     positions of every word n-gram.  ≤ m rows regardless of reference
     size — the membership structure is space-bounded by construction
     (that's the point of a Bloom filter), so it broadcasts at ≤ 8·m
     bytes even for a reference of billions of grams.
 
-    arrow_kernel=True (default) computes grams + the k salted hashes in
-    one mapInPandas pass with per-batch position dedup
+    Position k of a gram is hash48('bl{k}#' + gram) % m — k
+    independent md5-derived hashes with explicit salts instead of the
+    two-hash Kirsch-Mitzenmacher trick, so the oracle SQL is a literal
+    mirror.  Grams and the k salted hashes are computed in one
+    mapInPandas pass with per-batch position dedup
     (llm.grams.bloom_position_stream) — the final distinct shuffles
     ≤ m rows per batch instead of the k·grams stream."""
-    if arrow_kernel:
-        from benthos_spark.llm.grams import bloom_position_stream
-        return bloom_position_stream(reference, text, n, m, k)
-    from benthos_spark.llm.text import materialize_cols, tokens, word_ngrams
-
-    t = materialize_cols(reference.select(F.col(text)),
-                         __toks=tokens(F.col(text)))
-    grams = t.select(F.explode(word_ngrams(F.col("__toks"), n)).alias("g"))
-    return (grams.select(F.explode(bloom_positions(F.col("g"), m, k))
-                         .alias("pos"))
-            .distinct())
+    from benthos_spark.llm.grams import bloom_position_stream
+    return bloom_position_stream(reference, text, n, m, k)
 
 
 def bloom_contaminated(corpus: DataFrame, reference: DataFrame,
                        text: str = "text", id_col: str = "doc_id",
                        n: int = 5, m: int = 1 << 18,
-                       k: int = 3, arrow_kernel: bool = True) -> DataFrame:
+                       k: int = 3) -> DataFrame:
     """Approximate decontamination via a Bloom filter: flag corpus
     documents with any word n-gram whose k bloom bits are ALL set by
     the reference corpus (false positives at the classic
@@ -1087,38 +982,19 @@ def bloom_contaminated(corpus: DataFrame, reference: DataFrame,
     reference holds.  Scale shape: corpus side is a map-only scan —
     the 100 TB corpus never shuffles.
 
-    arrow_kernel=True (default) collects the ≤ m bloom positions to the
-    driver (bounded by the filter width by construction — the same
-    argument as the IVF centroid literals) and broadcasts them as a
-    Python frozenset into ONE mapInPandas pass that builds grams,
-    hashes the k probes, and counts flagged grams per doc
-    (llm.grams.bloom_flag_counts) — no explode, no join, no per-doc
-    hash-agg; only flagged docs are even emitted.  The Column fallback
-    keeps the explode → broadcast-semi-join → two-hash-agg plan.
+    The ≤ m bloom positions are collected to the driver (bounded by
+    the filter width by construction — the same argument as the IVF
+    centroid literals) and broadcast as a Python frozenset into ONE
+    mapInPandas pass that builds grams, hashes the k probes, and counts
+    flagged grams per doc (llm.grams.bloom_flag_counts) — no explode,
+    no join, no per-doc hash-agg; only flagged docs are even emitted.
 
     Returns (id_col, n_flagged_grams) for flagged docs only."""
-    bloom = bloom_build(reference, text, n, m, k,
-                        arrow_kernel=arrow_kernel)
-    if arrow_kernel:
-        from benthos_spark.llm.grams import bloom_flag_counts
-        pos = frozenset(r["pos"] for r in bloom.collect())
-        bc = corpus.sparkSession.sparkContext.broadcast(pos)
-        return bloom_flag_counts(corpus, bc, text, id_col, n, m, k)
-    from benthos_spark.llm.text import materialize_cols, tokens, word_ngrams
-
-    t = materialize_cols(corpus.select(F.col(id_col), F.col(text)),
-                         __toks=tokens(F.col(text)))
-    probes = (t.select(
-        F.col(id_col),
-        F.posexplode(word_ngrams(F.col("__toks"), n)).alias("gi", "g"))
-        .select(id_col, "gi",
-                F.explode(bloom_positions(F.col("g"), m, k)).alias("pos")))
-    # gram flagged ⟺ all k of its positions are present in the bloom set
-    hits = (probes.join(F.broadcast(bloom), "pos")
-            .groupBy(id_col, "gi")
-            .agg(F.count("*").alias("__k_hits"))
-            .filter(F.col("__k_hits") == k))
-    return hits.groupBy(id_col).agg(F.count("*").alias("n_flagged_grams"))
+    from benthos_spark.llm.grams import bloom_flag_counts
+    bloom = bloom_build(reference, text, n, m, k)
+    pos = frozenset(r["pos"] for r in bloom.collect())
+    bc = corpus.sparkSession.sparkContext.broadcast(pos)
+    return bloom_flag_counts(corpus, bc, text, id_col, n, m, k)
 
 
 def canonical_selection(docs: DataFrame, pairs: DataFrame,

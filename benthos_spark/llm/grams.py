@@ -12,27 +12,32 @@ took that operator 46.6s → 3.0s at sf1): one `mapInPandas` pass that
 splits, builds grams, and hashes with a memoized md5 — no per-gram
 Catalyst expression, no JVM↔Python chatter beyond one Arrow exchange.
 
-Bit-exactness contract with the Column path (and the DuckDB oracles),
-asserted by tests/test_llm.py::test_gram_kernel_matches_column_path:
+Bit-exactness contract with the DuckDB oracle SQL of every consumer
+query (``_sql_toks``/``_sql_hex12`` in __spark_entry__.py), asserted by
+those oracles and by tests/test_llm.py's pure-Python reference tests
+(``_ref_toks``/``_ref_grams``/``_ref_h48``, written from this contract
+and never importing it):
 
-- tokenize: Python ``re.split(r"\\s+", text.strip(" "), flags=re.ASCII)``
-  ≡ Spark ``split(trim(text), '\\s+')`` — Java's default ``\\s`` is the
-  ASCII class [ \\t\\n\\x0B\\f\\r], exactly Python's ``\\s`` under
-  re.ASCII, and both engines keep leading/trailing empty fields
-  (Pattern.split limit -1 ≡ re.split).  ``trim`` strips 0x20 only.
-- gram join: ``" ".join(toks[i:i+n])`` ≡ ``array_join(slice(toks,i,n),
-  ' ')`` (empty members kept — "\\ta b" yields the gram " a").
+- tokenize: ``re.split(r"\\s+", text.strip(" "), flags=re.ASCII)`` —
+  the ASCII whitespace class [ \\t\\n\\x0B\\f\\r] (also Java's default
+  ``\\s``, so Spark's ``split(trim(text), '\\s+')`` agrees), keeping
+  leading/trailing empty fields; ``trim`` strips 0x20 only, and
+  unicode whitespace does not split.  One known gap: the oracles'
+  DuckDB ``string_split_regex`` uses RE2, whose ``\\s`` lacks 0x0B, so
+  a vertical tab splits here but not in the oracle (no fixture text
+  contains one).
+- gram join: ``" ".join(toks[i:i+n])`` (empty members kept — "\\ta b"
+  yields the gram " a").
 - hash48: ``int.from_bytes(md5(utf8)[:6], 'big')`` ≡
   ``conv(substring(md5(g),1,12),16,10)``.
-- NULL text produces NO gram rows (Column path: size(null) < n ⇒ null
-  array ⇒ explode drops the row).
+- NULL text produces NO gram rows.
 
 Scale shape: every kernel here is MAP-ONLY over the corpus — the Arrow
 exchange replaces the interpreted HOF, not the plan's shuffle
 structure.  Kernels that can pre-aggregate do so per batch (bucket
 histograms, bigram partial counts, per-doc weights), so the rows they
 emit are bounded by |buckets| / |batch vocabulary| / |docs| — far
-smaller than the exploded gram stream the Column path shuffles.
+smaller than the exploded gram stream.
 
 Reference parity: the reference engine has no corpus-dedup layer; these
 back the LLM-pipeline operators (SURVEY §2 extension set).
@@ -95,9 +100,9 @@ def gram_hash_stream(df: DataFrame, text: str = "text",
     the kernel form of `explode(word_ngrams(toks, n))` + hash48.
 
     per_doc_distinct=True dedups WITHIN the kernel (a per-doc set),
-    replacing the `.distinct()` the Column path needs — that saves an
-    entire O(gram-stream) shuffle at 100 TB, since mapInPandas never
-    splits one input row across batches."""
+    replacing a `.distinct()` — that saves an entire O(gram-stream)
+    shuffle at 100 TB, since mapInPandas never splits one input row
+    across batches."""
     schema = f"{id_col} {_id_type(df, id_col)}, gh long"
 
     def run(batches: Iterator) -> Iterator:
@@ -123,10 +128,11 @@ def gram_hash_stream(df: DataFrame, text: str = "text",
 
 
 def _dsir_doc_grams(tk: list[str]) -> Iterator[str]:
-    """DSIR gram stream for one doc: unigrams (empty-string filtered,
-    mirroring `.filter(g != '')`) + word bigrams (all — a bigram with
-    an empty member like ' a' survives the filter in the Column path
-    too, since it is not the empty string)."""
+    """DSIR gram stream for one doc (Xie et al. 2023,
+    arXiv:2302.03169 §3): unigrams (empty-string filtered, mirroring
+    the oracle's `WHERE g <> ''`) + word bigrams (all — a bigram with
+    an empty member like ' a' survives that filter, since it is not
+    the empty string)."""
     for t in tk:
         if t:
             yield t
@@ -159,7 +165,7 @@ def dsir_bucket_hist(df: DataFrame, buckets: int, text: str = "text",
         for pdf in batches:
             rn = [0] * buckets
             tn = [0] * buckets if with_cond else None
-            # null cond ≡ false (the Column path's sum(cast) skips nulls);
+            # null cond ≡ false (as SQL's sum(cast(cond)) skips nulls);
             # x != x guards float-NaN from Arrow's nullable-bool transfer
             flags = ([bool(x) if x is not None and x == x else False
                       for x in pdf["__is_t"]] if with_cond else None)
@@ -191,9 +197,8 @@ def dsir_weight_stream(df: DataFrame, logratios: list[int],
     """(id, dsir_weight): per-document Σ logratios[hash48(g)%buckets]
     over the DSIR gram stream, computed entirely in the kernel —
     map-only, one output row per input document (docs with a null or
-    gram-less text get weight 0, matching the Column path's left-join
-    coalesce).  Python int sums are exact, so the result is the same
-    order-free integer the Column path aggregates."""
+    gram-less text get weight 0).  Python int sums are exact, so the
+    result is the same order-free integer the oracle SQL aggregates."""
     buckets = len(logratios)
     schema = f"{id_col} {_id_type(df, id_col)}, dsir_weight long"
     lr = list(logratios)
@@ -284,8 +289,8 @@ def unigram_bigram_partial_counts(df: DataFrame,
 # ------------------------------------------------------------ bloom
 
 def _bloom_doc_positions(tk: list[str], n: int, m: int, k: int, h):
-    """Per-gram k salted positions (classic explicit-salt Bloom,
-    mirroring dedup.bloom_positions: hash48('bl{i}#' + gram) % m)."""
+    """Per-gram k salted positions (classic explicit-salt Bloom:
+    hash48('bl{i}#' + gram) % m, see dedup.bloom_build)."""
     for j in range(len(tk) - n + 1):
         g = " ".join(tk[j:j + n])
         yield [h(f"bl{i}#" + g) % m for i in range(k)]
@@ -364,7 +369,7 @@ def repetition_stats(df: DataFrame, text: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, dup_line_frac, top_2gram_frac, top_3gram_frac): the Gopher
     repetition signals computed per document INSIDE the kernel — zero
-    shuffle (the Column path needs explode → two hash-aggregates →
+    shuffle (a Column plan needs explode → two hash-aggregates →
     pivot → join back).
 
     Bit-exactness: rounding matches Spark's round(x, 6) exactly via

@@ -165,26 +165,9 @@ def deterministic_shuffle(df: DataFrame, id_col: str = "doc_id",
 
 # ---------------------------------------------------------------- DSIR
 
-def dsir_grams(df: DataFrame, text: str = "text",
-               id_col: str = "doc_id",
-               extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Hashed n-gram feature stream for DSIR (Xie et al. 2023,
-    arXiv:2302.03169 §3): unigrams + word bigrams, one row per gram
-    occurrence.  Returns (id_col, *extra_cols, g)."""
-    from benthos_spark.llm.text import materialize_cols, tokens, word_ngrams
-
-    carried = [F.col(id_col), *(F.col(c) for c in extra_cols)]
-    t = materialize_cols(df.select(*carried, F.col(text)),
-                         __toks=tokens(F.col(text)))
-    grams = F.concat(F.col("__toks"), word_ngrams(F.col("__toks"), 2))
-    return (t.select(*carried, F.explode(grams).alias("g"))
-            .filter(F.col("g") != ""))
-
-
 def dsir_fit(target: DataFrame, raw: DataFrame, text: str = "text",
              id_col: str = "doc_id", buckets: int = 256,
-             smoothing: float = 0.5,
-             arrow_kernel: bool = True) -> list[int]:
+             smoothing: float = 0.5) -> list[int]:
     """Fit DSIR importance log-ratios: hash every unigram/bigram of the
     target sample and the raw corpus into `buckets` buckets, Laplace-
     smooth both distributions, and return per-bucket
@@ -196,21 +179,17 @@ def dsir_fit(target: DataFrame, raw: DataFrame, text: str = "text",
     hash aggregations producing `buckets` rows each; the collect is
     bounded by `buckets` (driver-side cost is O(256), not O(corpus)).
 
-    arrow_kernel=True (default) builds+hashes grams in one mapInPandas
-    pass with a per-batch histogram (llm.grams.dsir_bucket_hist) —
-    bit-identical to the Column path (llm/grams.py docstring contract),
-    without word_ngrams' interpreted per-gram lambdas."""
+    Grams are built and hashed in one mapInPandas pass with a per-batch
+    histogram (llm.grams.dsir_bucket_hist) — no interpreted per-gram
+    lambdas (at sf1 on 4 vCPU: 10.2 s with a Column word_ngrams plan,
+    4.0 s with the kernel)."""
     import math
 
+    from benthos_spark.llm.grams import dsir_bucket_hist
+
     def bucket_counts(df_: DataFrame) -> dict[int, int]:
-        if arrow_kernel:
-            from benthos_spark.llm.grams import dsir_bucket_hist
-            rows = dsir_bucket_hist(df_, buckets, text, id_col).collect()
-            return {int(r["b"]): int(r["rn"]) for r in rows if r["rn"]}
-        rows = (dsir_grams(df_, text, id_col)
-                .select((hash48(F.col("g")) % buckets).alias("b"))
-                .groupBy("b").agg(F.count("*").alias("n")).collect())
-        return {int(r["b"]): int(r["n"]) for r in rows}
+        rows = dsir_bucket_hist(df_, buckets, text, id_col).collect()
+        return {int(r["b"]): int(r["rn"]) for r in rows if r["rn"]}
 
     ct, cr = bucket_counts(target), bucket_counts(raw)
     t_tot = sum(ct.values()) + smoothing * buckets
@@ -224,44 +203,18 @@ def dsir_fit(target: DataFrame, raw: DataFrame, text: str = "text",
 
 
 def dsir_weights(df: DataFrame, logratios: list[int], text: str = "text",
-                 id_col: str = "doc_id",
-                 arrow_kernel: bool = True) -> DataFrame:
+                 id_col: str = "doc_id") -> DataFrame:
     """Per-document DSIR importance weight: Σ over the doc's
     unigram/bigram stream of the fitted bucket log-ratio (integer
     micro-nats, exact; order-free sum ⇒ partition-invariant).
 
-    Shape: explode the gram stream → codegen md5 bucket → plan-literal
-    array lookup → hash-aggregate back onto the id (map-side combine ⇒
-    the shuffle carries ~one (id, long) row per doc per partition).
-    Measured equal to the previous zero-shuffle array-fold at sf1 —
-    gram CONSTRUCTION (word_ngrams' interpreted array_join lambdas)
-    dominates either way — but this form keeps the md5 inside
-    whole-stage codegen and shares the dsir_grams stream shape with
-    the fit, so both stages profile and optimize together.  Docs with
-    an empty gram stream keep weight 0 via the left join.
-
-    arrow_kernel=True (default) computes the whole per-doc sum inside
-    one mapInPandas pass (llm.grams.dsir_weight_stream): map-only, one
-    output row per document, NO shuffle at all — Python int sums are
-    exact, so the weights are bit-identical to the Column path's
-    order-free int64 aggregation."""
-    if arrow_kernel:
-        from benthos_spark.llm.grams import dsir_weight_stream
-        return dsir_weight_stream(df, logratios, text, id_col)
-    buckets = len(logratios)
-    lr = F.array(*[F.lit(v).cast("long") for v in logratios])
-    contrib = (dsir_grams(df, text, id_col)
-               .select(F.col(id_col),
-                       F.element_at(
-                           lr, (hash48(F.col("g")) % buckets)
-                           .cast("int") + 1).alias("__c"))
-               .groupBy(id_col)
-               .agg(F.sum("__c").alias("dsir_weight")))
-    return (df.select(F.col(id_col))
-            .join(contrib, id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce(F.col("dsir_weight"),
-                               F.lit(0).cast("long")).alias("dsir_weight")))
+    The whole per-doc sum is computed inside one mapInPandas pass
+    (llm.grams.dsir_weight_stream): map-only, one output row per
+    document (weight 0 for a null or gram-less text), NO shuffle —
+    Python int sums are exact, so the weights equal the oracle SQL's
+    order-free integer aggregate."""
+    from benthos_spark.llm.grams import dsir_weight_stream
+    return dsir_weight_stream(df, logratios, text, id_col)
 
 
 def dsir_select(df: DataFrame, target: DataFrame, k: int,
@@ -286,32 +239,20 @@ def dsir_select(df: DataFrame, target: DataFrame, k: int,
 def dsir_fit_conditional(raw: DataFrame, target_cond: Column,
                          text: str = "text", id_col: str = "doc_id",
                          buckets: int = 256,
-                         smoothing: float = 0.5,
-                         arrow_kernel: bool = True) -> list[int]:
+                         smoothing: float = 0.5) -> list[int]:
     """`dsir_fit` when the target sample is a PREDICATE over the raw
     corpus (the common case — "docs like the wiki slice"): both bucket
     histograms come out of ONE scan via a conditional aggregate,
     halving the fit cost at 100 TB.  Same integer micro-nat output as
     dsir_fit, bit-identical when target ≡ raw.filter(target_cond).
-
-    arrow_kernel=True routes the scan through the batched-histogram
-    kernel (llm.grams.dsir_bucket_hist with cond) — same two counters,
-    no interpreted gram lambdas."""
+    The scan is the batched-histogram kernel (llm.grams.dsir_bucket_hist
+    with cond), counting both histograms in one pass."""
     import math
 
-    if arrow_kernel:
-        from benthos_spark.llm.grams import dsir_bucket_hist
-        rows = dsir_bucket_hist(raw, buckets, text, id_col,
-                                cond=target_cond).collect()
-    else:
-        rows = (dsir_grams(raw.withColumn("__is_t", target_cond),
-                           text, id_col, extra_cols=("__is_t",))
-                .select((hash48(F.col("g")) % buckets).alias("b"),
-                        "__is_t")
-                .groupBy("b")
-                .agg(F.count("*").alias("rn"),
-                     F.sum(F.col("__is_t").cast("long")).alias("tn"))
-                .collect())
+    from benthos_spark.llm.grams import dsir_bucket_hist
+
+    rows = dsir_bucket_hist(raw, buckets, text, id_col,
+                            cond=target_cond).collect()
     ct = {int(r["b"]): int(r["tn"]) for r in rows}
     cr = {int(r["b"]): int(r["rn"]) for r in rows}
     t_tot = sum(ct.values()) + smoothing * buckets

@@ -368,8 +368,8 @@ def pii_counts(text: Column) -> dict[str, Column]:
 # ---------------------------------------------------------- repetition
 # Gopher-style repetition signals (Rae et al. 2021 §A1.1; also used by
 # C4/RefinedWeb filtering): highly repetitive documents are low-quality
-# boilerplate.  All three are MAP-ONLY — higher-order functions over
-# per-row arrays, zero shuffle — so at 100 TB they cost one scan.
+# boilerplate.  All three are MAP-ONLY — one Arrow kernel pass, zero
+# shuffle — so at 100 TB they cost one scan.
 
 def nonempty_lines(text: Column) -> Column:
     """Trimmed non-empty lines of the document.
@@ -378,20 +378,10 @@ def nonempty_lines(text: Column) -> Column:
     signature has an optional second param (the trim string), so
     F.transform would take it as the (element, index) overload and
     silently pass the array INDEX as the trim string (no trimming at
-    all; caught by the repetition-kernel parity test)."""
+    all)."""
     return F.filter(F.transform(F.split(text, "\n"),
                                 lambda l: F.trim(l)),
                     lambda l: l != "")
-
-
-def dup_line_frac(text: Column) -> Column:
-    """Fraction of non-empty lines that are duplicates of another line
-    (1 - distinct/total; 0 for line-less docs)."""
-    ls = nonempty_lines(text)
-    n = F.size(ls).cast("double")
-    return F.when(n > 0, F.round(
-        F.lit(1.0) - F.size(F.array_distinct(ls)) / n, 6)) \
-        .otherwise(F.lit(0.0))
 
 
 def word_ngrams(toks: Column, n: int) -> Column:
@@ -428,91 +418,19 @@ def materialize_cols(df: DataFrame, **cols: Column) -> DataFrame:
     return out.drop("__m")
 
 
-def _max_equal_run(arr: Column) -> Column:
-    """Count of the most frequent element (mode count): sort, then fold
-    tracking the longest equal-run.  Per-row fold, no shuffle — at
-    scale this replaces an explode + two hash-aggregates."""
-    init = F.struct(F.lit("").alias("prev"),
-                    F.lit(0).cast("long").alias("run"),
-                    F.lit(0).cast("long").alias("best"))
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1) \
-            .otherwise(F.lit(1).cast("long"))
-        return F.struct(x.alias("prev"), run.alias("run"),
-                        F.greatest(acc["best"], run).alias("best"))
-
-    return F.aggregate(F.array_sort(arr), init, step, lambda a: a["best"])
-
-
-def top_ngram_frac(text: Column, n: int) -> Column:
-    """Fraction of the document's word n-grams taken up by the single
-    most frequent n-gram (0 when the doc has fewer than n tokens).
-
-    Column-level convenience (per-row fold; interpreted).  For bulk
-    scoring use repetition_signals — its explode + hash-aggregate plan
-    is ~11× faster at sf0.1 because every step stays in whole-stage
-    codegen, while aggregate()-lambdas run interpreted per element."""
-    grams = word_ngrams(tokens(text), n)
-    total = F.size(grams).cast("double")
-    return F.when(total > 0,
-                  F.round(_max_equal_run(grams) / total, 6)) \
-        .otherwise(F.lit(0.0))
-
-
 def repetition_signals(df: DataFrame, text: str = "text",
-                       id_col: str = "doc_id",
-                       arrow_kernel: bool = True) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """(id, dup_line_frac, top_2gram_frac, top_3gram_frac) — the
     standard repetition-based quality gate for pre-training corpora.
 
-    arrow_kernel=True (default) computes all three signals per document
-    inside one mapInPandas pass (llm.grams.repetition_stats) — ZERO
-    shuffle, bit-identical (Decimal HALF_UP matches Spark's round).
-
-    Column fallback plan shape: dup_line_frac stays map-only
-    (array_distinct is a native collection op); the n-gram mode counts
-    go through explode → partial-agg count → per-doc max/sum → pivot.
-    The doc_id-keyed shuffles carry (doc_id, n, gram) with map-side
-    combine collapsing repeated grams — repetitive docs (the ones this
-    op exists to catch) shrink the most.  Measured 11× faster than the
-    per-row sort+fold alternative at sf0.1 (codegen vs interpreted
-    lambdas) — and the kernel beats both by dropping the shuffles
-    entirely."""
-    if arrow_kernel:
-        from benthos_spark.llm.grams import repetition_stats
-        return repetition_stats(df, text, id_col)
-    from benthos_spark.operators.scale import ensure_scan_parallelism
-    t = F.col(text)
-    base = materialize_cols(
-        ensure_scan_parallelism(df.select(F.col(id_col), F.col(text)))
-        .select(F.col(id_col), dup_line_frac(t).alias("dup_line_frac"),
-                tokens(t).alias("__toks")),
-        __toks=F.col("__toks"))
-    def _tag(n):
-        # nb: a `lambda g, n=n:` two-param form would be taken by
-        # F.transform as its (element, index) overload — the index
-        # would silently shadow the default
-        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("g"))
-
-    grams = base.select(
-        id_col,
-        F.explode(F.concat(*[
-            F.transform(word_ngrams(F.col("__toks"), n), _tag(n))
-            for n in (2, 3)])).alias("e"))
-    per = (grams.groupBy(id_col, F.col("e.n").alias("n"),
-                         F.col("e.g").alias("g")).count()
-           .groupBy(id_col, "n")
-           .agg((F.max("count") / F.sum("count")).alias("frac")))
-    piv = (per.groupBy(id_col).pivot("n", [2, 3])
-           .agg(F.round(F.first("frac"), 6)))
-    return (base.select(id_col, "dup_line_frac")
-            .join(piv, id_col, "left")
-            .select(F.col(id_col), F.col("dup_line_frac"),
-                    F.coalesce(F.col("2"), F.lit(0.0))
-                     .alias("top_2gram_frac"),
-                    F.coalesce(F.col("3"), F.lit(0.0))
-                     .alias("top_3gram_frac")))
+    All three signals are computed per document inside one mapInPandas
+    pass (llm.grams.repetition_stats) — ZERO shuffle, bit-identical to
+    the oracle SQL (Decimal HALF_UP matches Spark's round).  An
+    explode → count → pivot Column plan needs two doc_id-keyed
+    shuffles and a join back (at sf1 on 4 vCPU: 14.8 s as Columns,
+    3.0 s with the kernel)."""
+    from benthos_spark.llm.grams import repetition_stats
+    return repetition_stats(df, text, id_col)
 
 
 # ---------------------------------------------------------------- gopher
@@ -783,8 +701,7 @@ def frequency_mass(df: DataFrame, counts: DataFrame | None = None,
 
 def bigram_lm_score(df: DataFrame, text: str = "text",
                     id_col: str = "doc_id",
-                    lam: float = 0.5,
-                    arrow_kernel: bool = True) -> DataFrame:
+                    lam: float = 0.5) -> DataFrame:
     """Interpolated bigram language-model likelihood per document (the
     KenLM-style fluency signal of a CCNet-ish quality pipeline,
     integer-exact):
@@ -801,41 +718,28 @@ def bigram_lm_score(df: DataFrame, text: str = "text",
     Returns (id_col, n_tokens, lm_nano) where lm_nano =
     Σ round(1e9·p_i); mean token likelihood = lm_nano / (1e9·n_tokens).
 
-    Scale shape: two wordcount shuffles (unigrams, bigrams) build the
-    LM; scoring joins the token stream against both tables (broadcast
-    when the vocab fits — the same head-vocab assumption as
-    frequency_mass) and re-aggregates once on doc id.
-
-    arrow_kernel=True (default) builds the bigram count table in one
-    mapInPandas pass with per-batch Counter pre-aggregation
-    (llm.grams.bigram_partial_counts): same (bg, nbg) table, but the
-    shuffle carries one row per distinct bigram per batch instead of
-    the full exploded stream, and no interpreted gram lambdas run."""
+    Scale shape: ONE kernel pass + ONE shuffle builds both count
+    tables (llm.grams.unigram_bigram_partial_counts, per-batch Counter
+    pre-aggregation, so the shuffle carries one row per distinct gram
+    per batch instead of the exploded stream); scoring joins the token
+    stream against them (broadcast when the vocab fits — the same
+    head-vocab assumption as frequency_mass) and re-aggregates once on
+    doc id."""
+    from benthos_spark.llm.grams import unigram_bigram_partial_counts
     toks_df = materialize_cols(df.select(F.col(id_col), F.col(text)),
                                __toks=tokens(F.col(text)))
-    if arrow_kernel:
-        # ONE kernel pass + ONE shuffle builds BOTH count tables (r9);
-        # the four consumers below (c1 ×2 broadcasts + tot + c2) all
-        # reuse that single aggregate through ReuseExchange instead of
-        # paying a second full corpus scan for the unigram table.
-        from benthos_spark.llm.grams import unigram_bigram_partial_counts
-        # lazy checkpoint: the vocab-sized table materializes ONCE —
-        # without it each of the four consumers below re-executes the
-        # kernel pass (Catalyst does not reuse Python-stage subtrees
-        # across broadcast subplans; measured 8 MapInPandas in the
-        # un-checkpointed plan).  Scale-safe: this table must fit the
-        # broadcasts it feeds.
-        counts = unigram_bigram_partial_counts(df, text) \
-            .localCheckpoint(eager=False)
-        c1 = (counts.filter(~F.col("is_bi"))
-              .select(F.col("g").alias("token"), F.col("n")))
-        c2 = (counts.filter(F.col("is_bi"))
-              .select(F.col("g").alias("bg"), F.col("n").alias("nbg")))
-    else:
-        c1 = unigram_counts(df, text)
-        c2 = (toks_df.select(
-            F.explode(word_ngrams(F.col("__toks"), 2)).alias("bg"))
-            .groupBy("bg").agg(F.count("*").alias("nbg")))
+    # lazy checkpoint: the vocab-sized table materializes ONCE — without
+    # it each of the four consumers below (c1 ×2 broadcasts + tot + c2)
+    # re-executes the kernel pass (Catalyst does not reuse Python-stage
+    # subtrees across broadcast subplans; measured 8 MapInPandas in the
+    # un-checkpointed plan).  Scale-safe: this table must fit the
+    # broadcasts it feeds.
+    counts = unigram_bigram_partial_counts(df, text) \
+        .localCheckpoint(eager=False)
+    c1 = (counts.filter(~F.col("is_bi"))
+          .select(F.col("g").alias("token"), F.col("n")))
+    c2 = (counts.filter(F.col("is_bi"))
+          .select(F.col("g").alias("bg"), F.col("n").alias("nbg")))
     tot = c1.agg(F.sum("n").alias("__T"))
 
     # token stream with the previous token riding along (null at pos 1)

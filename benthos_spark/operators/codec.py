@@ -22,9 +22,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+
+def _flate_compress(b: bytes) -> bytes:
+    c = _zlib.compressobj(wbits=-15)
+    return c.compress(b) + c.flush()
+
+
 _CODECS = {
     "gzip": (lambda b: _gzip.compress(b, mtime=0), _gzip.decompress),
     "zlib": (_zlib.compress, _zlib.decompress),
+    # raw DEFLATE (RFC 1951): no zlib header or Adler-32 trailer
+    "flate": (_flate_compress, lambda b: _zlib.decompress(b, -15)),
     "bz2": (_bz2.compress, _bz2.decompress),
     "lzma": (_lzma.compress, _lzma.decompress),
 }

@@ -28,6 +28,12 @@ _LOCAL_CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager")
 
+# The directory holding this package.  Python workers unpickle kernel
+# functions by reference to benthos_spark modules, so they must import
+# the copy the driver imported; a local worker otherwise finds the
+# package only when the driver's working directory is this directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _DEFAULTS = {
     # ~cores for local; on a real cluster this is overridden by AQE's
     # coalescing anyway (initialPartitionNum can be raised per-job).
@@ -59,8 +65,10 @@ def get_spark(app_name: str = "benthos_spark", master: str | None = None,
     A local master also gets Spark's FileSystem-based streaming
     checkpoint file manager instead of the FileContext one, which forks
     a `readlink` per checkpoint rename and status check on a host
-    without libhadoop (see `_LOCAL_CHECKPOINT_FILE_MANAGER`).  Any key
-    passed in ``extra_conf`` overrides these defaults.
+    without libhadoop (see `_LOCAL_CHECKPOINT_FILE_MANAGER`), and its
+    Python workers get this package's root on PYTHONPATH, so the engine
+    runs from any working directory.  Any key passed in ``extra_conf``
+    overrides these defaults.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
@@ -74,6 +82,8 @@ def get_spark(app_name: str = "benthos_spark", master: str | None = None,
             builder = builder.config(
                 "spark.sql.streaming.checkpointFileManagerClass",
                 _LOCAL_CHECKPOINT_FILE_MANAGER)
+            builder = builder.config("spark.executorEnv.PYTHONPATH",
+                                     _PACKAGE_ROOT)
     for k, v in {**_DEFAULTS, **extra_conf}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -115,9 +115,10 @@ def replay_parquet_many(spark: SparkSession,
             # serial loop puts on the critical path BEFORE any drain
             # overlaps (r10: 5 serial starts = 1.9 s of the gate's
             # wall).  All starts happen inside the pinned-conf region
-            # either way; inheritable_thread_target propagates the
-            # session's JVM thread-locals per PySpark's documented
-            # contract.
+            # either way; inheritable_thread_target(spark) propagates
+            # the session's JVM local properties AND its job tags to
+            # each start thread (passing the function instead of the
+            # session drops the tags with a warning).
             from concurrent.futures import ThreadPoolExecutor
 
             from pyspark import inheritable_thread_target
@@ -128,9 +129,9 @@ def replay_parquet_many(spark: SparkSession,
                                      schema=schemas[p],
                                      tmp_root=tmp_root)
 
+            start_one = inheritable_thread_target(spark)(_start_one)
             with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-                futs = [pool.submit(inheritable_thread_target(_start_one),
-                                    spec) for spec in specs]
+                futs = [pool.submit(start_one, spec) for spec in specs]
             # keep every stream that did start, so a failed start
             # still stops them below, then re-raise the first failure
             started = [f.result() for f in futs if f.exception() is None]

@@ -9,6 +9,8 @@ import sys
 
 from benthos_spark.testkit import run_case, run_test_file
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Soak/parity tier: excluded from the default fast run the driver's
 # verify budget can finish (pytest.ini); run with -m slow.
 pytestmark = __import__('pytest').mark.slow
@@ -53,11 +55,11 @@ def test_run_case_counts_parts(spark):
 
 
 def _run_cli(args, stdin=""):
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=REPO,
                SPARK_GRAFT_CPUS="4")
     return subprocess.run(
         [sys.executable, "-m", "benthos_spark", *args],
-        input=stdin, capture_output=True, text=True, cwd="/root/repo",
+        input=stdin, capture_output=True, text=True, cwd=REPO,
         env=env, timeout=300)
 
 

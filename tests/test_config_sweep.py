@@ -11,6 +11,8 @@ import os
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Soak/parity tier: excluded from the default fast run the driver's
 # verify budget can finish (pytest.ini); run with -m slow.
 pytestmark = __import__('pytest').mark.slow
@@ -22,7 +24,7 @@ CONFIG_DIR = "/root/reference/config"
                     reason="reference configs not present")
 def test_every_reference_config_compiles_or_gates(spark):
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.config_sweep import classify
     try:
         os.unlink("/tmp/benthos.sock")

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
 import math
+import re
 
 from pyspark.sql import functions as F
 
@@ -978,18 +980,39 @@ def test_dsir_fit_conditional_matches_two_pass(spark):
     assert fused == two_pass
 
 
-def test_minhash_arrow_kernel_matches_column_path(spark):
-    from benthos_spark.llm.dedup import minhash_lsh_pairs
+def _ref_band_keys(hashed, bands=4):
+    """{doc: {(band, band_key)}} from collected shingle-hash arrays:
+    per permutation min((a*h + b) % P), band keys joined with '-'."""
+    from benthos_spark.llm.dedup import MINHASH_PERMS
+    from benthos_spark.llm.text import HASH_PRIME
+    r = len(MINHASH_PERMS) // bands
+    out = {}
+    for row in hashed.collect():
+        sig = [min((a * h + b) % HASH_PRIME for h in row["__sh"])
+               for a, b in MINHASH_PERMS]
+        out[row["doc_id"]] = {
+            (bi, "-".join(str(v) for v in sig[bi * r:(bi + 1) * r]))
+            for bi in range(bands)}
+    return out
+
+
+def test_minhash_kernel_matches_python_reference(spark):
+    from itertools import combinations
+
+    from benthos_spark.llm.dedup import shingle_hash_frame
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {'x' if i % 3 else 'y'} zeta "
              f"eta theta word{i % 5}") for i in range(60)],
         ["doc_id", "text"])
-    a = {(r.id_a, r.id_b)
-         for r in minhash_lsh_pairs(docs, arrow_kernel=True).collect()}
-    b = {(r.id_a, r.id_b)
-         for r in minhash_lsh_pairs(docs, arrow_kernel=False).collect()}
-    assert a == b and a, "kernel and Column paths must agree (non-empty)"
+    buckets = {}
+    for d, keys in _ref_band_keys(shingle_hash_frame(docs)).items():
+        for key in keys:
+            buckets.setdefault(key, []).append(d)
+    ref = {p for ids in buckets.values()
+           for p in combinations(sorted(ids), 2)}
+    got = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs).collect()}
+    assert got == ref and got, "kernel must match the reference (non-empty)"
 
 
 def test_star_edges_give_identical_components_to_pairs(spark):
@@ -1051,13 +1074,13 @@ def test_star_edges_linear_on_boilerplate_skew(spark, tmp_path):
     assert via_stars == via_pairs and via_stars
 
 
-def test_minhash_paths_agree_on_null_text(spark):
+def test_minhash_null_text_matches_python_reference(spark):
     """NULL text coalesces to '' before shingle hashing, so no null
-    reaches either the numpy kernel (NaN→int64 cast) or the Column
-    fold — both paths must produce identical band keys for null docs."""
+    reaches the numpy kernel (NaN→int64 cast): null docs get the band
+    keys of the empty document."""
     import warnings
     from benthos_spark.llm.dedup import shingle_hash_frame, \
-        _banded_signatures_arrow, _banded_signatures_column
+        _banded_signatures_arrow
 
     docs = spark.createDataFrame(
         [(1, None), (2, None), (3, "alpha beta gamma delta"),
@@ -1069,10 +1092,9 @@ def test_minhash_paths_agree_on_null_text(spark):
         arrow = {(r.doc_id, r.band, r.band_key)
                  for r in _banded_signatures_arrow(
                      hashed, "doc_id", bands=4, r=4).collect()}
-    col = {(r.doc_id, r.band, r.band_key)
-           for r in _banded_signatures_column(
-               hashed, "doc_id", bands=4, r=4).collect()}
-    assert arrow == col
+    ref = {(d, b, k) for d, keys in _ref_band_keys(hashed).items()
+           for b, k in keys}
+    assert arrow == ref
     # the two null docs collide with each other (same '' shingle)
     keys = {}
     for d, b, k in arrow:
@@ -1081,11 +1103,32 @@ def test_minhash_paths_agree_on_null_text(spark):
 
 
 # ------------------------------------------------- gram kernel parity
-# The Arrow gram kernels (llm/grams.py) must be bit-identical to the
-# Column word_ngrams paths on every edge the tokenizer contract names:
-# null text, empty text, leading/trailing tabs (empty tokens!), runs of
-# whitespace, unicode words, unicode whitespace (NOT split — Java \s is
-# ASCII), and docs shorter than n.
+# The Arrow gram kernels (llm/grams.py) must match a pure-Python
+# reference written from that module's documented contract on every
+# edge it names: null text, empty text, leading/trailing tabs (empty
+# tokens!), runs of whitespace, unicode words, unicode whitespace (NOT
+# split — the class is ASCII), and docs shorter than n.  The reference
+# strips only 0x20, splits on the explicit ASCII class, joins grams
+# with one space and hashes with md5; it does not import the kernels.
+
+_REF_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _ref_toks(t):
+    return None if t is None else _REF_WS.split(t.strip(" "))
+
+
+def _ref_grams(tk, n):
+    return [" ".join(tk[i:i + n]) for i in range(len(tk) - n + 1)]
+
+
+def _ref_h48(g):
+    return int(hashlib.md5(g.encode("utf-8")).hexdigest()[:12], 16)
+
+
+def _ref_texts(df):
+    return {r.doc_id: r.text for r in df.collect()}
+
 
 def _tricky_docs(spark):
     return spark.createDataFrame(
@@ -1117,62 +1160,117 @@ def test_gram_hash_stream_matches_column_path(spark):
                       gram_hash_stream(docs, n=2).collect()))
 
 
-def test_dsir_kernel_matches_column_path(spark):
+def _ref_dsir_grams(t):
+    tk = _ref_toks(t) or []
+    return [g for g in tk if g] + _ref_grams(tk, 2)
+
+
+def _ref_dsir_fit(ct, cr, buckets, smoothing=0.5):
+    t_tot = sum(ct.values()) + smoothing * buckets
+    r_tot = sum(cr.values()) + smoothing * buckets
+    return [int(round((math.log((ct.get(b, 0) + smoothing) / t_tot)
+                       - math.log((cr.get(b, 0) + smoothing) / r_tot))
+                      * 1e6)) for b in range(buckets)]
+
+
+def test_dsir_kernel_matches_python_reference(spark):
+    from collections import Counter
+
     from benthos_spark.llm.sampling import (dsir_fit, dsir_weights,
                                             dsir_fit_conditional)
     docs = _tricky_docs(spark)
+    texts = _ref_texts(docs)
+
+    def hist(ids):
+        return Counter(_ref_h48(g) % 32 for i in ids
+                       for g in _ref_dsir_grams(texts[i]))
+
+    ref_lr = _ref_dsir_fit(hist([i for i in texts if i >= 7]),
+                           hist(texts), 32)
     target = docs.filter(F.col("doc_id") >= 7)
     lr_a = dsir_fit(target, docs, buckets=32)
-    lr_c = dsir_fit(target, docs, buckets=32, arrow_kernel=False)
-    assert lr_a == lr_c
+    assert lr_a == ref_lr
     wa = {(r.doc_id, r.dsir_weight)
           for r in dsir_weights(docs, lr_a, "text", "doc_id").collect()}
-    wc = {(r.doc_id, r.dsir_weight)
-          for r in dsir_weights(docs, lr_a, "text", "doc_id",
-                                arrow_kernel=False).collect()}
-    assert wa == wc and len(wa) == 12
+    ref_w = {(i, sum(lr_a[_ref_h48(g) % 32] for g in _ref_dsir_grams(t)))
+             for i, t in texts.items()}
+    assert wa == ref_w and len(wa) == 12
     cond = F.col("doc_id") >= 7
-    assert dsir_fit_conditional(docs, cond, buckets=32) == \
-        dsir_fit_conditional(docs, cond, buckets=32, arrow_kernel=False)
+    assert dsir_fit_conditional(docs, cond, buckets=32) == ref_lr
 
 
-def test_bloom_kernel_matches_column_path(spark):
+def test_bloom_kernel_matches_python_reference(spark):
     from benthos_spark.llm.dedup import bloom_build, bloom_contaminated
     docs = _tricky_docs(spark)
+    texts = _ref_texts(docs)
+    m, k = 1 << 12, 3
+
+    def probes(g):
+        return [_ref_h48(f"bl{i}#" + g) % m for i in range(k)]
+
+    ref_pos = {p for i in (10, 11)
+               for g in _ref_grams(_ref_toks(texts[i]), 3)
+               for p in probes(g)}
     ref = docs.filter(F.col("doc_id").isin(10, 11))
-    a = {r.pos for r in bloom_build(ref, n=3, m=1 << 12).collect()}
-    c = {r.pos for r in bloom_build(ref, n=3, m=1 << 12,
-                                    arrow_kernel=False).collect()}
-    assert a == c and a
+    a = {r.pos for r in bloom_build(ref, n=3, m=m).collect()}
+    assert a == ref_pos and a
+    ref_flags = {}
+    for i, t in texts.items():
+        c = sum(all(p in ref_pos for p in probes(g))
+                for g in _ref_grams(_ref_toks(t) or [], 3))
+        if c:
+            ref_flags[i] = c
     fa = {(r.doc_id, r.n_flagged_grams) for r in bloom_contaminated(
-        docs, ref, n=3, m=1 << 12).collect()}
-    fc = {(r.doc_id, r.n_flagged_grams) for r in bloom_contaminated(
-        docs, ref, n=3, m=1 << 12, arrow_kernel=False).collect()}
-    assert fa == fc and fa
+        docs, ref, n=3, m=m).collect()}
+    assert fa == set(ref_flags.items()) and fa
 
 
-def test_bigram_lm_and_substring_kernels_match_column_path(spark):
+def test_bigram_lm_and_substring_kernels_match_python_reference(spark):
+    from collections import Counter
+    from itertools import combinations
+
+    from benthos_spark.llm.grams import unigram_bigram_partial_counts
     from benthos_spark.llm.text import bigram_lm_score
     from benthos_spark.llm.dedup import ngram_contamination, \
         exact_substring_pairs
     docs = _tricky_docs(spark)
+    texts = _ref_texts(docs)
+    toks = {i: _ref_toks(t) for i, t in texts.items() if t is not None}
+
+    # LM count table: non-empty unigrams, bigrams of adjacent tokens
+    ref_counts = Counter()
+    for tk in toks.values():
+        ref_counts.update((g, False) for g in tk if g)
+        ref_counts.update((g, True) for g in _ref_grams(tk, 2))
+    counts = {(r.g, r.is_bi): r.n
+              for r in unigram_bigram_partial_counts(docs).collect()}
+    assert counts == dict(ref_counts)
     ba = {tuple(r) for r in bigram_lm_score(docs).collect()}
-    bc = {tuple(r) for r in bigram_lm_score(docs,
-                                            arrow_kernel=False).collect()}
-    assert ba == bc and ba
+    assert ba
+
+    # decontamination: distinct shared 3-gram hashes with doc 10
+    ev = {_ref_h48(g) for g in _ref_grams(toks[10], 3)}
+    ref_c = {(i, len({_ref_h48(g) for g in _ref_grams(tk, 3)} & ev))
+             for i, tk in toks.items()}
     ca = {tuple(r) for r in ngram_contamination(
         docs, docs.filter(F.col("doc_id") == 10), n=3).collect()}
-    cc = {tuple(r) for r in ngram_contamination(
-        docs, docs.filter(F.col("doc_id") == 10), n=3,
-        arrow_kernel=False).collect()}
-    assert ca == cc and ca
+    assert ca == {x for x in ref_c if x[1]} and ca
+
+    # exact substrings: posting lists of 2..max_df docs, shared counts
+    posting = {}
+    for i, tk in toks.items():
+        for gh in {_ref_h48(g) for g in _ref_grams(tk, 3)}:
+            posting.setdefault(gh, []).append(i)
+    ref_s = Counter(p for ds in posting.values() if 1 < len(ds) <= 16
+                    for p in combinations(sorted(ds), 2))
     sa = {tuple(r) for r in exact_substring_pairs(docs, k=3).collect()}
-    sc = {tuple(r) for r in exact_substring_pairs(
-        docs, k=3, arrow_kernel=False).collect()}
-    assert sa == sc
+    assert sa == {(a, b, n) for (a, b), n in ref_s.items()} and sa
 
 
-def test_repetition_kernel_matches_column_path(spark):
+def test_repetition_kernel_matches_python_reference(spark):
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
     from benthos_spark.llm.text import repetition_signals
     # doc 24: top bigram count 3 over exactly 640 bigrams -> 3/640 =
     # 0.0046875, a round-to-6 TIE.  Spark round() works on the double's
@@ -1185,10 +1283,26 @@ def test_repetition_kernel_matches_column_path(spark):
         [(20, "x\n x \nx\n\n  \ny"), (21, "a b a b a b a b"),
          (22, "w\nw\nw"), (23, "p q r p q r p q"), (24, tie)],
         "doc_id long, text string"))
+
+    def r6(x):  # Spark round(x, 6): HALF_UP on the shortest repr
+        return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
+                                               rounding=ROUND_HALF_UP))
+
+    def top(tk, n):
+        gs = _ref_grams(tk, n)
+        return r6(max(Counter(gs).values()) / len(gs)) if gs else 0.0
+
+    ref = set()
+    for i, t in _ref_texts(docs).items():
+        if t is None:
+            ref.add((i, 0.0, 0.0, 0.0))
+            continue
+        lines = [x for x in (l.strip(" ") for l in t.split("\n")) if x]
+        dup = r6(1.0 - len(set(lines)) / len(lines)) if lines else 0.0
+        tk = _ref_toks(t)
+        ref.add((i, dup, top(tk, 2), top(tk, 3)))
     a = {tuple(r) for r in repetition_signals(docs).collect()}
-    c = {tuple(r) for r in repetition_signals(
-        docs, arrow_kernel=False).collect()}
-    assert a == c and len(a) == 17
+    assert a == ref and len(a) == 17
     tie_row = [r for r in a if r[0] == 24]
     assert tie_row and tie_row[0][2] == 0.004688
 

@@ -14,6 +14,8 @@ import os
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Soak/parity tier: excluded from the default fast run the driver's
 # verify budget can finish (pytest.ini); run with -m slow.
 pytestmark = __import__('pytest').mark.slow
@@ -50,7 +52,7 @@ def test_reference_example(spark, spec, inp, want, request):
     if tag in SKIP:
         pytest.skip(SKIP[tag])
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.run_ref_examples import run_case
     ok, got, err = run_case(spark, spec["mapping"], inp, want)
     assert ok, (f"{spec['file']}:{spec['line']} mapping "

@@ -16,6 +16,8 @@ import os
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Soak/parity tier: excluded from the default fast run the driver's
 # verify budget can finish (pytest.ini); run with -m slow.
 pytestmark = __import__('pytest').mark.slow
@@ -25,7 +27,7 @@ VECTORS = os.path.join(os.path.dirname(__file__), "golden",
 
 
 def test_reference_field_tables(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.run_ref_field_tests import run_field_case
 
     cases = json.load(open(VECTORS))

@@ -10,6 +10,8 @@ import os
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Soak/parity tier: excluded from the default fast run the driver's
 # verify budget can finish (pytest.ini); run with -m slow.
 pytestmark = __import__('pytest').mark.slow
@@ -33,7 +35,7 @@ def _cases():
 @pytest.mark.parametrize("case", _cases())
 def test_processor_case(spark, case):
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.run_ref_processor_tests import run_processor_case
     ok, got, err = run_processor_case(spark, case)
     assert ok, (f"{case['file']}:{case['line']} "

@@ -16,6 +16,8 @@ import os
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Soak/parity tier: excluded from the default fast run the driver's
 # verify budget can finish (pytest.ini); run with -m slow.
 pytestmark = __import__('pytest').mark.slow
@@ -33,7 +35,7 @@ SKIP = {
 
 
 def test_reference_query_parser_tables(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.run_ref_query_tests import run_query_case
 
     cases = [c for c in json.load(open(VECTORS))

@@ -386,6 +386,37 @@ output:
         assert r.unpacked == r.content
 
 
+def test_flate_roundtrip_yaml_is_raw_deflate(spark):
+    """`flate` (reference compress.go) is raw DEFLATE: it roundtrips
+    through the YAML processors, and `decompress` reads a zlib stream
+    stripped of its 2-byte header and 4-byte Adler-32 trailer."""
+    import zlib
+
+    from benthos_spark.operators.codec import decompress
+
+    out = run_stream(spark, """
+input:
+  generate:
+    count: 3
+    mapping: |
+      root.id = this.id
+      root.content = "payload-" + this.id.string()
+pipeline:
+  processors:
+    - compress: {algorithm: flate, source: content, target: packed}
+    - decompress: {algorithm: flate, source: packed, target: unpacked}
+output:
+  memory: {}
+""")
+    rows = out.collect()
+    assert len(rows) == 3
+    for r in rows:
+        assert r.unpacked == r.content
+    p = b"flate payload " * 8
+    raw = spark.createDataFrame([(zlib.compress(p)[2:-4],)], "b binary")
+    assert raw.select(decompress(F.col("b"), "flate")).first()[0] == p
+
+
 def test_group_by_check_form_yaml(spark):
     out = run_stream(spark, """
 input:

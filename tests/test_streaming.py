@@ -3,6 +3,7 @@ Streaming run (file source → memory sink, Trigger.AvailableNow)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -175,6 +176,62 @@ def test_replay_many_failed_start_cleans_up(spark, tmp_path, monkeypatch):
     assert not [q for q in spark.streams.active
                 if (q.name or "").startswith("bs_replay_")]
     assert not list(root.glob("bs_replay_root_*"))
+
+
+def test_replay_many_start_threads_inherit_session_tags(spark, tmp_path,
+                                                        monkeypatch):
+    """The concurrent starts of a multi-drain replay run with the
+    session's job tags (so tag-based cancellation reaches them), and
+    wrapping them raises no "Tags will not be inherited" warning."""
+    import warnings
+
+    from benthos_spark.streaming import replay as replay_mod
+
+    src = tmp_path / "src"
+    _events(spark).coalesce(1).write.parquet(str(src))
+    real_start = replay_mod._start_replay
+    seen = []
+
+    def recording_start(*args, **kwargs):
+        seen.append(set(spark.getTags()))
+        return real_start(*args, **kwargs)
+
+    monkeypatch.setattr(replay_mod, "_start_replay", recording_start)
+    spark.addTag("bs-replay-tag")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            outs = replay_mod.replay_parquet_many(
+                spark, [(str(src), lambda s: s, "append")] * 2)
+    finally:
+        spark.removeTag("bs-replay-tag")
+    assert [o.count() for o in outs] == [4, 4]
+    assert not [w for w in caught if "Tags will not be inherited"
+                in str(w.message)]
+    assert seen == [{"bs-replay-tag"}] * 2
+
+
+def test_local_python_workers_import_the_driver_package(spark):
+    """Kernel functions unpickle by reference to benthos_spark modules,
+    so a local session puts the package root on the workers'
+    PYTHONPATH: the engine then runs from any working directory, and
+    workers import the same copy as the driver."""
+    import benthos_spark
+
+    root = os.path.dirname(os.path.dirname(benthos_spark.__file__))
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.executorEnv.PYTHONPATH") == root
+
+    def where(batches):
+        import pandas as pd
+
+        import benthos_spark as pkg
+        for _ in batches:
+            yield pd.DataFrame({"f": [pkg.__file__]})
+
+    got = {r.f for r in spark.range(1).mapInPandas(where, "f string")
+           .collect()}
+    assert got == {benthos_spark.__file__}
 
 
 def test_checkpoint_file_manager_pinned(spark, tmp_path):

@@ -25,7 +25,7 @@ import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CONFIG_DIR = "/root/reference/config"
 

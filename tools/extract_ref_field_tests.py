@@ -14,10 +14,11 @@ Usage: python tools/extract_ref_field_tests.py \
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.extract_ref_method_tests import (  # noqa: E402
     P, _block_end, _parse_messages, _strip_comments)

@@ -28,10 +28,11 @@ Usage: python tools/extract_ref_processor_tests.py \
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.extract_ref_method_tests import P, _strip_comments  # noqa: E402
 

@@ -17,9 +17,10 @@ Usage: python tools/plan_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # query → (pattern, reason) pairs that are intentional
 ALLOW: dict[str, list[tuple[str, str]]] = {

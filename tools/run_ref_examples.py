@@ -10,11 +10,13 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-VECTORS = "/root/repo/tests/golden/ref_bloblang_examples.json"
+VECTORS = os.path.join(REPO, "tests/golden/ref_bloblang_examples.json")
 
 
 def _norm(v):

@@ -11,11 +11,13 @@ Standalone:  python tools/run_ref_field_tests.py [case-name ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-VECTORS = "/root/repo/tests/golden/ref_field_cases.json"
+VECTORS = os.path.join(REPO, "tests/golden/ref_field_cases.json")
 
 
 def run_field_case(spark, case: dict):

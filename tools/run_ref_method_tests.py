@@ -15,11 +15,13 @@ Shared by tests/test_ref_method_vectors.py and standalone:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-VECTORS = "/root/repo/tests/golden/ref_method_cases.json"
+VECTORS = os.path.join(REPO, "tests/golden/ref_method_cases.json")
 
 
 def _lit(v) -> str:

@@ -17,11 +17,13 @@ Standalone:  python tools/run_ref_query_tests.py [case-name ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-VECTORS = "/root/repo/tests/golden/ref_query_parser_cases.json"
+VECTORS = os.path.join(REPO, "tests/golden/ref_query_parser_cases.json")
 
 
 def _serialize(v) -> str:
