@@ -51,7 +51,7 @@ def _sql_char_hash(expr: str) -> str:
 
 
 def _sql_toks(expr: str) -> str:
-    return f"string_split_regex(trim({expr}), '\\s+')"
+    return f"string_split_regex(trim({expr}), '[\\s\\v]+')"
 
 
 def _sql_hex12(expr: str) -> str:
@@ -2707,10 +2707,12 @@ qt(query_id, term) AS (SELECT * FROM (VALUES {qt_vals})),
 c AS (SELECT qt.query_id, post.doc_id, {contrib} AS c
       FROM post JOIN qt USING (term) JOIN dfreq USING (term)
       CROSS JOIN stats),
-s AS (SELECT query_id, doc_id, SUM(c) AS score_micro FROM c GROUP BY 1, 2),
+s AS (SELECT query_id, doc_id, CAST(SUM(c) AS BIGINT) AS score_micro
+      FROM c GROUP BY 1, 2),
 r AS (SELECT *, row_number() OVER (PARTITION BY query_id
         ORDER BY score_micro DESC, doc_id) AS rank FROM s)
-SELECT query_id, doc_id, rank, score_micro FROM r WHERE rank <= {_BM25_K}
+SELECT query_id, doc_id, CAST(rank AS INTEGER) AS rank, score_micro
+FROM r WHERE rank <= {_BM25_K}
 """
 
 
@@ -2790,7 +2792,8 @@ p AS (SELECT j.doc_id,
       LEFT JOIN c2 ON c2.bg = j.wprev || ' ' || j.w
       CROSS JOIN tot)
 SELECT doc_id, COUNT(*) AS n_tokens,
-       SUM(CAST(round(prob * 1000000000.0) AS BIGINT)) AS lm_nano
+       CAST(SUM(CAST(round(prob * 1000000000.0) AS BIGINT)) AS BIGINT)
+           AS lm_nano
 FROM p GROUP BY 1
 """)
 def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4072,7 +4075,7 @@ def _dsir_oracle() -> str | None:
     return f"""
 WITH lr(b, v) AS (SELECT * FROM (VALUES {vals})),
 g AS (SELECT * FROM {_sql_dsir_gramstream()}),
-w AS (SELECT g.doc_id, SUM(v) AS dsir_weight
+w AS (SELECT g.doc_id, CAST(SUM(v) AS BIGINT) AS dsir_weight
       FROM g JOIN lr ON lr.b = {_sql_hex12('g.g')} % {_DSIR_BUCKETS}
       GROUP BY 1)
 SELECT d.doc_id, COALESCE(w.dsir_weight, 0) AS dsir_weight

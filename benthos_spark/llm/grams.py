@@ -22,10 +22,9 @@ and never importing it):
   the ASCII whitespace class [ \\t\\n\\x0B\\f\\r] (also Java's default
   ``\\s``, so Spark's ``split(trim(text), '\\s+')`` agrees), keeping
   leading/trailing empty fields; ``trim`` strips 0x20 only, and
-  unicode whitespace does not split.  One known gap: the oracles'
-  DuckDB ``string_split_regex`` uses RE2, whose ``\\s`` lacks 0x0B, so
-  a vertical tab splits here but not in the oracle (no fixture text
-  contains one).
+  unicode whitespace does not split.  The oracles' DuckDB
+  ``string_split_regex`` uses RE2, whose ``\\s`` lacks 0x0B, so they
+  split on ``[\\s\\v]+`` to cover the same class.
 - gram join: ``" ".join(toks[i:i+n])`` (empty members kept — "\\ta b"
   yields the gram " a").
 - hash48: ``int.from_bytes(md5(utf8)[:6], 'big')`` ≡

@@ -274,8 +274,8 @@ class WebsocketIngestServer:
     the upgrade handshake (Sec-WebSocket-Accept = base64(sha1(key ||
     258EAFA5-E914-47DA-95CA-C5AB0DC85B11))) and the frame layer
     (FIN/opcode, 7/16/64-bit lengths, client-to-server masking) —
-    since no websocket package ships in this container (the
-    real-where-stdlib-reaches doctrine, cf. snappy_py/lz4_py)."""
+    since none of the engine's dependencies ships a websocket
+    package."""
 
     _GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 

@@ -59,3 +59,26 @@ def test_coverage_doc_names_every_query():
     cited = set(re.findall(r"query: ([a-z_0-9]+)", doc))
     ghost = cited - set(entry.queries())
     assert not ghost, f"COVERAGE.md cites unknown queries: {ghost}"
+
+
+@pytest.mark.parametrize("name", ["bm25_search", "lm_bigram_score",
+                                  "dsir_select"])
+def test_driver_hash_matches_oracle(spark, sf_dir, duck, monkeypatch, name):
+    """The driver's canonical hash (values AND pandas dtypes) agrees for
+    the queries whose oracle integer SUMs DuckDB returns as HUGEINT,
+    which `.df()` turns into float64 unless the oracle casts them."""
+    from tools.driver_hash_check import canon
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
+    oracle = (entry._dsir_oracle() if name == "dsir_select"  # trains on sf
+              else entry.oracle_sql()[name])
+    got = canon(entry.queries()[name](spark, sf_dir).toPandas())
+    assert got == canon(duck.execute(oracle).df())
+
+
+def test_oracle_tokenizer_splits_like_the_kernels(duck):
+    """`_sql_toks` (DuckDB RE2) splits on every ASCII whitespace byte,
+    0x0B included, exactly as llm/grams.py and Java's `\\s` do."""
+    from benthos_spark.llm.grams import _toks
+    text = "a b\tc\nd\x0be\x0cf\rg  h"
+    got = duck.execute(f"SELECT {entry._sql_toks('$t')}", {"t": text})
+    assert got.fetchone()[0] == _toks(text) == list("abcdefgh")

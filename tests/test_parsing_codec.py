@@ -341,15 +341,17 @@ def test_avro_union_branch_by_value_type():
     assert _decode(_Reader(_encode(True, bsch)), bsch) is True  # not int 1
 
 
-def test_snappy_pure_python_codec():
+def test_snappy_codec(monkeypatch):
     """Raw-snappy block format: spec-example decode (copies with
-    overlap), roundtrip via the all-literal encoder, error paths."""
-    import pytest
-    from benthos_spark.operators.snappy_py import (SnappyError, compress,
-                                                   decompress)
+    overlap), roundtrip, error paths, and a junk length preamble
+    rejected before pyarrow allocates its output."""
+    from benthos_spark.operators import codec
+    compress, decompress = codec._CODECS["snappy"]
     # roundtrips incl. empty, >60-byte literal, 64 KiB+ chunking
     for payload in (b"", b"x", b"hello snappy", b"a" * 100, b"ab" * 40000):
         assert decompress(compress(payload)) == payload
+    data = b"the quick brown fox jumps over the lazy dog " * 200
+    assert len(compress(data)) < len(data) // 10  # real matcher
     # hand-built stream exercising a real back-reference: literal
     # "Wikipedia" + copy-1 (tag: kind=1, len-4 in bits 2-4, offset
     # high bits in 5-7 + one offset byte) of offset=9, len=9 → doubled
@@ -360,30 +362,40 @@ def test_snappy_pure_python_codec():
     stream2 = bytes([8]) + bytes([1 << 2]) + b"ab" \
         + bytes([((6 - 4) << 2) | 1, 2])
     assert decompress(stream2) == b"abababab"
-    with pytest.raises(SnappyError):
+    with pytest.raises(ValueError, match="^snappy: "):
         decompress(b"\x05\x00")  # truncated
-    with pytest.raises(SnappyError):
+    with pytest.raises(ValueError, match="^snappy: "):
         decompress(bytes([4]) + bytes([((4 - 4) << 2) | 1, 9]))  # bad offset
+    # a 4 GiB preamble over a 1-byte body never reaches pyarrow
+    monkeypatch.setattr(codec, "_SNAPPY", None)
+    with pytest.raises(ValueError, match="^snappy: length preamble"):
+        decompress(b"\xff\xff\xff\xff\x0f\x00")
 
 
 def test_snappy_in_compress_processor(spark):
+    from pyspark.errors import PythonException
+
     from benthos_spark.operators.codec import compress as c_col
-    from benthos_spark.operators.codec import decompress_str
+    from benthos_spark.operators.codec import decompress, decompress_str
     df = spark.createDataFrame([("payload-123",)], "content string")
     out = df.withColumn("z", c_col(F.col("content"), "snappy")) \
             .withColumn("back", decompress_str(F.col("z"), "snappy"))
     row = out.collect()[0]
     assert row.back == "payload-123"
+    # junk fails the query with an error naming the algorithm
+    junk = spark.createDataFrame([(b"\x05\x00",)], "z binary")
+    with pytest.raises(PythonException, match="ValueError: snappy: "):
+        junk.select(decompress(F.col("z"), "snappy")).collect()
 
 
 def test_snappy_property_roundtrip():
     """Hypothesis: compress∘decompress is identity for arbitrary byte
-    strings (pure-Python raw-snappy), and the decoder rejects random
-    prefixes gracefully (SnappyError, never a crash)."""
+    strings (raw snappy), and the decoder rejects random prefixes
+    gracefully (ValueError, never a crash)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-    from benthos_spark.operators.snappy_py import (SnappyError, compress,
-                                                   decompress)
+    from benthos_spark.operators.codec import _CODECS
+    compress, decompress = _CODECS["snappy"]
 
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=4096))
@@ -395,29 +407,35 @@ def test_snappy_property_roundtrip():
     def never_crashes(junk):
         try:
             decompress(junk)
-        except SnappyError:
+        except ValueError:
             pass  # rejecting malformed input is the contract
 
     roundtrip()
     never_crashes()
 
 
-def test_lz4_pure_python_codec():
-    """LZ4 frame+block: xxHash32 spec vectors, frame roundtrip, and
-    BOTH-direction interop with pyarrow's bundled LZ4 (our decoder
-    reads its frames, its decoder reads ours)."""
-    import pytest
-    from benthos_spark.operators.lz4_py import (Lz4Error, compress,
-                                                decompress, xxh32)
+def test_lz4_codec():
+    """LZ4 frames: xxHash32 spec vectors, frame roundtrip, a frozen
+    golden frame with its content checksum, checksum rejections, and
+    BOTH-direction interop with Arrow's own LZ4 frames."""
+    import pyarrow as pa
+
+    from benthos_spark.operators.codec import _CODECS, _xxh32
+    compress, decompress = _CODECS["lz4"]
     # xxHash32 spec vectors (xxhash_spec.md / python-xxhash test suite)
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"abc") == 0x32D153FF
-    assert xxh32(b"Nobody inspects the spammish repetition") == 0xE2293B2F
+    assert _xxh32(b"") == 0x02CC5D05
+    assert _xxh32(b"a") == 0x550D7456
+    assert _xxh32(b"abc") == 0x32D153FF
+    assert _xxh32(b"Nobody inspects the spammish repetition") == 0xE2293B2F
     for payload in (b"", b"x", b"hello lz4", b"ab" * 40000,
                     bytes(range(256)) * 300, b"x" * 17):
         assert decompress(compress(payload)) == payload
-    import pyarrow as pa
+    # frozen frame: FLG 0x64 (content checksum), BD 0x40, one stored
+    # block, EndMark, xxh32 of the payload
+    golden = bytes.fromhex("04224d186440a70b0000807061796c6f61642d3132"
+                           "3300000000f8b9f219")
+    assert compress(b"payload-123") == golden
+    assert decompress(golden) == b"payload-123"
     c = pa.Codec("lz4")
     data = b"the quick brown fox jumps over the lazy dog " * 200
     assert decompress(c.compress(data, asbytes=True)) == data
@@ -425,11 +443,17 @@ def test_lz4_pure_python_codec():
                         asbytes=True) == data
     # repetitive input actually compresses (real matcher, not stored)
     assert len(compress(data)) < len(data) // 10
-    with pytest.raises(Lz4Error):
+    with pytest.raises(ValueError, match="^lz4: "):
         decompress(b"\x00\x01\x02")  # bad magic / truncated
+    with pytest.raises(ValueError, match="^lz4: "):
+        decompress(b"")
     bad = bytearray(compress(b"payload-123"))
     bad[-1] ^= 0xFF  # flip content checksum
-    with pytest.raises(Lz4Error):
+    with pytest.raises(ValueError, match="^lz4: "):
+        decompress(bytes(bad))
+    bad = bytearray(golden)
+    bad[12] ^= 0x01  # flip one payload byte: only the checksum sees it
+    with pytest.raises(ValueError, match="^lz4: "):
         decompress(bytes(bad))
 
 
@@ -444,11 +468,11 @@ def test_lz4_in_compress_processor(spark):
 
 def test_lz4_property_roundtrip():
     """Hypothesis: frame compress∘decompress is identity; the decoder
-    rejects junk with Lz4Error, never a crash."""
+    rejects junk with ValueError, never a crash."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-    from benthos_spark.operators.lz4_py import (Lz4Error, compress,
-                                                decompress)
+    from benthos_spark.operators.codec import _CODECS
+    compress, decompress = _CODECS["lz4"]
 
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=4096))
@@ -460,7 +484,7 @@ def test_lz4_property_roundtrip():
     def never_crashes(junk):
         try:
             decompress(junk)
-        except Lz4Error:
+        except ValueError:
             pass
 
     roundtrip()

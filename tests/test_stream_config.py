@@ -12,6 +12,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from benthos_spark.operators.codec import _CODECS
 from benthos_spark.stream import (ConfigError, build_stream,
                                   compile_condition, run_stream)
 
@@ -367,8 +368,9 @@ output:
     assert errs[3] is not None  # v=3 over maximum
 
 
-def test_compress_roundtrip_yaml(spark):
-    out = run_stream(spark, """
+@pytest.mark.parametrize("alg", sorted(_CODECS))
+def test_compress_roundtrip_yaml(spark, alg):
+    out = run_stream(spark, f"""
 input:
   generate:
     count: 3
@@ -377,12 +379,14 @@ input:
       root.content = "payload-" + this.id.string()
 pipeline:
   processors:
-    - compress: {algorithm: gzip, source: content, target: packed}
-    - decompress: {algorithm: gzip, source: packed, target: unpacked}
+    - compress: {{algorithm: {alg}, source: content, target: packed}}
+    - decompress: {{algorithm: {alg}, source: packed, target: unpacked}}
 output:
-  memory: {}
+  memory: {{}}
 """)
-    for r in out.collect():
+    rows = out.collect()
+    assert len(rows) == 3
+    for r in rows:
         assert r.unpacked == r.content
 
 
