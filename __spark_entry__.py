@@ -50,8 +50,21 @@ def _sql_char_hash(expr: str) -> str:
             "c -> CAST(ascii(c) AS BIGINT))), (a,b) -> (a*31+b) % 1000000007)")
 
 
+# RE2's `\s` lacks 0x0B, which Java's `\s` (and so the kernels) has:
+# every whitespace class below adds `\v`.
 def _sql_toks(expr: str) -> str:
     return f"string_split_regex(trim({expr}), '[\\s\\v]+')"
+
+
+def _sql_bpe_ish(expr: str) -> str:
+    """Pre-token count == llm.text.bpe_ish_token_count."""
+    return (f"len(regexp_extract_all({expr}, "
+            "'[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s\\v]'))")
+
+
+def _sql_n_words(expr: str) -> str:
+    """Word count of one line == llm.text.c4_clean_lines' split."""
+    return f"len(regexp_split_to_array({expr}, '[\\s\\v]+'))"
 
 
 def _sql_hex12(expr: str) -> str:
@@ -1213,8 +1226,7 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("text_analysis", oracle=f"""
 SELECT doc_id,
   CAST(len(toks) AS INTEGER) AS n_tokens,
-  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))
-       AS INTEGER) AS n_bpe_ish,
+  CAST({_sql_bpe_ish("text")} AS INTEGER) AS n_bpe_ish,
   CAST(len(list_filter(lower_toks, t -> t IN ('the','a','an','of','to','and',
       'in','is','it','that','for','on','with','as','at','by'))) AS DOUBLE)
     / CAST(len(toks) AS DOUBLE) AS stopword_ratio
@@ -4282,7 +4294,7 @@ sig AS (
          list_filter(list_transform(str_split(page, chr(10)),
                                     l -> trim(l)),
                      l -> l <> '' AND regexp_matches(l, '[.!?"]$')
-                          AND len(regexp_split_to_array(l, '\\s+')) >= 5
+                          AND {_sql_n_words("l")} >= 5
                           AND NOT regexp_matches(lower(l),
                               'javascript|cookie|privacy policy'))
            AS kept

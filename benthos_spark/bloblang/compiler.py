@@ -1060,10 +1060,6 @@ def _compile_func(node: ast.FuncCall, scope: Scope):
 
 # ---------------------------------------------------------------- methods
 
-def _go_bool(v) -> bool:
-    return bool(v)
-
-
 def _pure_doc_path(node) -> list[str] | None:
     """this.a.b / json("a.b") / json().a.b → ["a","b"]; None when the
     node is anything but a plain document path."""

@@ -1,14 +1,12 @@
-"""Schema-codec processors: avro / protobuf ⇄ structured columns.
+"""Schema-codec processor: avro → structured columns.
 
-Reference: lib/processor/{avro.go:22, protobuf.go:27} (to_json /
-from_json operators over schema'd payloads).
+Reference: lib/processor/avro.go:22 (to_json over schema'd payloads).
 
-Spark ships `from_avro`/`to_avro` (pyspark.sql.avro.functions) and
-`from_protobuf`/`to_protobuf` (pyspark.sql.protobuf.functions), but both
-need their runtime jars (spark-avro / spark-protobuf) on the cluster.
-This container has neither, so the wrappers gate with an actionable
-error instead of failing deep inside py4j — the same pattern the
-reference uses for build-tagged components.
+Spark ships `from_avro` (pyspark.sql.avro.functions), but it needs the
+spark-avro runtime jar on the cluster.  This container lacks it, so the
+wrapper gates with an actionable error instead of failing deep inside
+py4j — the same pattern the reference uses for build-tagged components.
+The protobuf processor runs on the pure-Python codec in `protobuf_py`.
 """
 
 from __future__ import annotations
@@ -43,31 +41,3 @@ def avro_to_struct(col: Column, json_schema: str) -> Column:
                        "avro decode", "spark-avro_2.13")
     from pyspark.sql.avro.functions import from_avro
     return from_avro(col, json_schema)
-
-
-def struct_to_avro(col: Column) -> Column:
-    """`avro` op=from_json equivalent: struct → binary avro."""
-    _require_jvm_class("org.apache.spark.sql.avro.CatalystDataToAvro",
-                       "avro encode", "spark-avro_2.13")
-    from pyspark.sql.avro.functions import to_avro
-    return to_avro(col)
-
-
-def protobuf_to_struct(col: Column, message_name: str,
-                       desc_file_path: str) -> Column:
-    """`protobuf` op=to_json equivalent."""
-    _require_jvm_class(
-        "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst",
-        "protobuf decode", "spark-protobuf_2.13")
-    from pyspark.sql.protobuf.functions import from_protobuf
-    return from_protobuf(col, message_name, desc_file_path)
-
-
-def struct_to_protobuf(col: Column, message_name: str,
-                       desc_file_path: str) -> Column:
-    """`protobuf` op=from_json equivalent."""
-    _require_jvm_class(
-        "org.apache.spark.sql.protobuf.CatalystDataToProtobuf",
-        "protobuf encode", "spark-protobuf_2.13")
-    from pyspark.sql.protobuf.functions import to_protobuf
-    return to_protobuf(col, message_name, desc_file_path)

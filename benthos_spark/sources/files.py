@@ -34,19 +34,6 @@ def read_file_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_stream_files(spark: SparkSession, path: str, schema,
-                      fmt: str = "parquet",
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming file input — the watch-directory mode of the file
-    sources.  `max_files_per_trigger` is the `rate_limit` analogue
-    (lib/processor/rate_limit.go:18 → source-side throttling,
-    SURVEY §2.2 batch-shape table)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.format(fmt).load(path)
-
-
 def map_kafka_frame(df: DataFrame) -> DataFrame:
     """Kafka record frame (value/topic/partition/offset/key/timestamp —
     the spark-sql-kafka source schema) → engine datamodel: payload in

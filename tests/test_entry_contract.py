@@ -82,3 +82,19 @@ def test_oracle_tokenizer_splits_like_the_kernels(duck):
     text = "a b\tc\nd\x0be\x0cf\rg  h"
     got = duck.execute(f"SELECT {entry._sql_toks('$t')}", {"t": text})
     assert got.fetchone()[0] == _toks(text) == list("abcdefgh")
+
+
+def test_oracle_bpe_and_word_counts_split_0x0b_like_java(spark, duck):
+    """`text_analysis`'s `n_bpe_ish` and `c4_line_clean`'s five-word
+    rule treat 0x0B as whitespace in the oracle SQL (RE2) as the
+    kernels do (Java's `\\s`)."""
+    from pyspark.sql import functions as F
+
+    from benthos_spark.llm.text import bpe_ish_token_count, c4_clean_lines
+    text = "one two\x0bthree four\x0bfive."
+    got = spark.range(1).select(
+        bpe_ish_token_count(F.lit(text)).alias("bpe"),
+        F.size(c4_clean_lines(F.lit(text))).alias("kept")).first()
+    assert (got.bpe, got.kept) == (6, 1)
+    sql = f"SELECT {entry._sql_bpe_ish('$t')}, {entry._sql_n_words('$t')}"
+    assert duck.execute(sql, {"t": text}).fetchone() == (6, 5)

@@ -49,9 +49,10 @@ def main() -> int:
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     # DuckDB's default memory_limit assumes it owns ~80% of the box,
-    # but it shares this process with a 48g-heap Spark JVM — at sf1
-    # the big ANN oracles then die with bad_alloc instead of spilling.
-    # Bound it (overridable) so DuckDB spills to disk under pressure.
+    # but it shares this process with a Spark JVM whose heap may take
+    # half the RAM (get_spark's default) — at sf1 the big ANN oracles
+    # then die with bad_alloc instead of spilling.  Bound it
+    # (overridable) so DuckDB spills to disk under pressure.
     con.execute("SET memory_limit = '"
                 + os.environ.get("SPARK_GRAFT_ORACLE_MEM", "24GB")
                 + "'")
