@@ -2290,6 +2290,25 @@ class MappingExec:
               keep: tuple[str, ...] = ()) -> DataFrame:
         """``keep``: input columns passed through unchanged (e.g. batch
         bookkeeping) unless the mapping assigns the same name."""
+        cols, drop_cond = self.projection(df, this, keep)
+        cols = [c.alias(name) for name, c in cols]
+        if drop_cond is not None:
+            # project FIRST, then filter: assignments (incl. cross-part
+            # windows like .from_all()) see the whole batch before any
+            # deleted() rows leave it — the reference evaluates every
+            # statement against the full batch too
+            keep_col = ~F.coalesce(drop_cond, F.lit(False))
+            return (df.select(*cols, keep_col.alias("__bl_keep__"))
+                      .filter(F.col("__bl_keep__"))
+                      .drop("__bl_keep__"))
+        return df.select(*cols)
+
+    def projection(self, df: DataFrame, this: Column | None = None,
+                   keep: tuple[str, ...] = ()
+                   ) -> tuple[list[tuple[str, Column]], Column | None]:
+        """The mapping over `df` as its output `(name, Column)` list,
+        in output order, and the condition under which `deleted()`
+        drops a row (None when no statement deletes the root)."""
         scope = Scope(this_col=this, root_fields={}, df=df)
         for stmt in self.mapping.statements:  # maps usable before def site
             if isinstance(stmt, ast.MapDef):
@@ -2434,32 +2453,22 @@ class MappingExec:
         cols = []
         for k in keep_names:
             if k == "meta" and meta_final is not None:
-                cols.append(meta_final.alias("meta"))
+                cols.append(("meta", meta_final))
             elif k == ERROR_COL and err_final is not None:
-                cols.append(err_final.alias(ERROR_COL))
+                cols.append((ERROR_COL, err_final))
             else:
-                cols.append(F.col(k))
+                cols.append((k, F.col(k)))
         for name, val in scope.root_fields.items():
-            col = _tree_to_struct(val) if isinstance(val, dict) else val
-            cols.append(col.alias(name))
+            cols.append((name, _tree_to_struct(val)
+                         if isinstance(val, dict) else val))
         if not scope.root_fields and not meta_updates:
             raise BloblangCompileError("mapping assigns no root fields")
         if meta_updates and meta_final is None:
             for key, val in meta_updates:
                 if val is not None:
-                    cols.append(val.cast("string")
-                                .alias(f"meta_{key or 'root'}"))
+                    cols.append((f"meta_{key or 'root'}", val.cast("string")))
         _ = identity_base
-        if drop_cond is not None:
-            # project FIRST, then filter: assignments (incl. cross-part
-            # windows like .from_all()) see the whole batch before any
-            # deleted() rows leave it — the reference evaluates every
-            # statement against the full batch too
-            keep_col = ~F.coalesce(drop_cond, F.lit(False))
-            return (df.select(*cols, keep_col.alias("__bl_keep__"))
-                      .filter(F.col("__bl_keep__"))
-                      .drop("__bl_keep__"))
-        return df.select(*cols)
+        return cols, drop_cond
 
     def _root_value(self, stmt: ast.RootAssign, scope: Scope,
                     df: DataFrame, this: Column | None):
@@ -2797,6 +2806,25 @@ def check_dynamic(df: DataFrame, src: str) -> Column:
 
     _check.__annotations__ = {}
     return pandas_udf(_check, "boolean")(*cols)
+
+
+def columnar_projection(df: DataFrame, src: str,
+                        keep: tuple[str, ...] = ()
+                        ) -> tuple[list[tuple[str, Column]],
+                                   Column | None] | None:
+    """`map_text(df, src, keep=keep)` as `MappingExec.projection`, or
+    None where `map_text` would hand the mapping to the per-document
+    interpreter (a pure message frame, a `dynamic_reason` construct on
+    a frame with `content`) or raise (a columnar compile failure)."""
+    mapping = parse_mapping(src)
+    if "content" in df.columns and (is_pure_message(df)
+                                    or dynamic_reason(mapping) is not None):
+        return None
+    from pyspark.errors import AnalysisException
+    try:
+        return MappingExec(mapping, src).projection(df, keep=keep)
+    except (BloblangCompileError, AnalysisException):
+        return None
 
 
 def map_text(df: DataFrame, src: str, this: Column | None = None,

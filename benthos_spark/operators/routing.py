@@ -19,13 +19,14 @@ def switch_case(cases: list[tuple[Column | None, Column]],
                 alias: str = "case") -> Column:
     """`switch` with pure-mapping cases (lib/processor/switch.go:27):
     first matching check wins, like the reference's case scan.  A `None`
-    check is the default (fallthrough) case."""
+    check takes every row that reaches it, so cases after it are never
+    taken; a check that is NULL for a row counts as false."""
     expr = None
     default = None
     for check, value in cases:
         if check is None:
             default = value
-            continue
+            break
         expr = F.when(check, value) if expr is None else expr.when(check, value)
     if expr is None:
         expr = default if default is not None else F.lit(None)
@@ -38,20 +39,111 @@ def switch_branches(df: DataFrame,
                     cases: list[tuple[Column | None, Callable[[DataFrame], DataFrame]]],
                     ) -> DataFrame:
     """`switch` with processor-bearing cases: route each row to the first
-    matching case's sub-pipeline, union the results.  Each branch is a
-    filtered view of the same scan, so Catalyst reuses the exchange."""
+    matching case's sub-pipeline, union the results.  A `None` check
+    takes every remaining row, and a NULL check counts as false, as in
+    `switch_case`.  Each branch filters its own copy of `df`, so the
+    physical plan scans the input, and runs every processor above it,
+    once per case; `switch_projection` is the one-scan form for cases
+    that are single projections."""
     remaining = F.lit(True)
     branches = []
     for check, pipeline in cases:
         if check is None:
             branches.append(pipeline(df.filter(remaining)))
+            remaining = F.lit(False)
         else:
+            check = F.coalesce(check, F.lit(False))
             branches.append(pipeline(df.filter(remaining & check)))
             remaining = remaining & ~check
     out = branches[0]
     for b in branches[1:]:
         out = out.unionByName(b, allowMissingColumns=True)
     return out
+
+
+def switch_projection(df: DataFrame,
+                      cases: list[tuple[Column | None,
+                                        list[tuple[str, Column]],
+                                        Column | None]],
+                      ) -> DataFrame | None:
+    """`switch_branches` over cases that each project `df` row by row,
+    as ONE projection of one scan.  A case is `(check, outputs, drop)`:
+    its output `(name, Column)` list and the condition under which it
+    deletes a row (None: never).
+
+    A tag column holds the first matching case (`switch_case`).  Each
+    output column is a CASE over the tag, or the case's expression
+    itself when every case gives the same one; rows with no case, or
+    that their case deletes, are filtered out.  The result equals the
+    union's: its columns in `unionByName` order, NULL where a row's
+    case does not produce them.  None when that equality is not
+    certain, and the caller keeps the union: a case whose projection
+    is not row-wise (a window, generator, aggregate or Python UDF sees
+    other rows or rows of other cases), a column whose type differs
+    between cases (the union would widen it), or names that differ
+    only in case."""
+    from pyspark.errors import AnalysisException
+
+    if not cases:
+        return None
+    jvm = df.sparkSession._jvm
+    python_udf = jvm.org.apache.spark.sql.catalyst.trees.TreePattern \
+        .PYTHON_UDF()
+    base = df._jdf.queryExecution().analyzed()
+    tag = "__switch_case__"
+    types: list[dict[str, object]] = []
+    for _check, outputs, drop in cases:
+        cols = [c.alias(n) for n, c in outputs]
+        if drop is not None:
+            cols.append(drop.alias("__switch_drop__"))
+        try:
+            case_df = df.select(*cols)
+            schema = case_df.schema
+        except AnalysisException:
+            return None
+        plan = case_df._jdf.queryExecution().analyzed()
+        if (plan.nodeName() != "Project" or not plan.child().equals(base)
+                or plan.containsPattern(python_udf)):
+            return None
+        names = [n for n, _ in outputs]
+        if len({n.lower() for n in names}) < len(names):
+            return None
+        types.append({f.name: f.dataType for f in schema.fields[:len(names)]})
+    order: list[str] = []
+    for t in types:
+        order += [n for n in t if n not in order]
+    if len({n.lower() for n in order}) < len(order):
+        return None
+    for n in order:
+        dts = [t[n] for t in types if n in t]
+        if any(dt != dts[0] for dt in dts):
+            return None
+
+    case = F.col(tag)
+
+    def over_case(exprs: dict[int, Column]) -> Column:
+        out = None
+        for i, e in exprs.items():
+            out = (F.when(case == i, e) if out is None
+                   else out.when(case == i, e))
+        return out
+
+    outs = [dict(outputs) for _c, outputs, _d in cases]
+    cols = []
+    for n in order:
+        exprs = {i: o[n] for i, o in enumerate(outs) if n in o}
+        first = exprs[min(exprs)]
+        same = len(exprs) == len(cases) and all(
+            e._jc.equals(first._jc) for e in exprs.values())
+        cols.append((first if same else over_case(exprs)).alias(n))
+    keep = case.isNotNull()
+    drops = {i: d for i, (_c, _o, d) in enumerate(cases) if d is not None}
+    if drops:
+        keep = keep & ~F.coalesce(over_case(drops), F.lit(False))
+    tagged = df.withColumn(tag, switch_case(
+        [(check, F.lit(i)) for i, (check, _o, _d) in enumerate(cases)],
+        alias=tag))
+    return tagged.filter(keep).select(*cols)
 
 
 def group_by_checks(df: DataFrame,

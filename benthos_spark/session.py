@@ -21,6 +21,20 @@ jars (`_local_classpath`), built from the files in `jvm/`:
   micro-batch: 1,110 properties become 594.  `mapred-default.xml` is
   left alone, because the output committers read its defaults.
 
+After the session starts, `_drop_property_sources` clears the "source"
+that Hadoop records for each property of the session's two base confs
+(which default file defined it).  Every copy of a conf carries those
+sources, and every time Spark ships a conf to a task or a micro-batch,
+`Configuration.write` gzips each property's source through its own
+GZIP stream: 594 of them, ~40% of the serialized bytes and most of the
+time.  Without them a conf carries sources only for the few dozen keys
+set programmatically, and a copy serializes in ~35 KB instead of
+~58 KB and ~0.9 ms instead of ~3 ms.  Values do not change; only
+`getPropertySources` returns null for a default key, which Spark's one
+caller (`SparkHadoopUtil.propertySources`) shows as "".  If the JVM
+refuses the reflective access, one warning is logged and confs keep
+their sources, which costs only speed.
+
 Cluster masters keep Spark's and Hadoop's defaults.
 """
 
@@ -217,6 +231,39 @@ def _jvm_can_load(class_name: str) -> bool:
     return True
 
 
+@functools.cache
+def _warn_once(msg: str) -> None:
+    _log.warning(msg)
+
+
+def _drop_property_sources(spark: SparkSession) -> None:
+    """Clear the per-property source map (`updatingResource`, private
+    and nullable) of the SparkContext's Hadoop conf and of the shared
+    state's, the two that every per-batch conf is copied from.
+
+    `JobConf` is initialized first: its static block registers
+    `mapred-default.xml` and the other MapReduce resources, and
+    registering a new default resource reloads every live conf, which
+    would record the sources again.  Each conf is loaded (`size()`)
+    before its map is cleared, for the same reason."""
+    jvm = spark._jvm
+    try:
+        jvm.java.lang.Class.forName(
+            "org.apache.hadoop.mapred.JobConf", True,
+            jvm.java.lang.Thread.currentThread().getContextClassLoader())
+        field = jvm.java.lang.Class.forName(
+            "org.apache.hadoop.conf.Configuration").getDeclaredField(
+                "updatingResource")
+        field.setAccessible(True)
+        for conf in (spark.sparkContext._jsc.hadoopConfiguration(),
+                     spark._jsparkSession.sharedState().hadoopConf()):
+            conf.size()
+            field.set(conf, None)
+    except Exception as e:  # noqa: BLE001
+        _warn_once("could not clear the Hadoop confs' property sources; "
+                   f"every conf Spark ships keeps them: {e}")
+
+
 def get_spark(app_name: str = "benthos_spark", master: str | None = None,
               **extra_conf: str) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -240,7 +287,12 @@ def get_spark(app_name: str = "benthos_spark", master: str | None = None,
       directory instead of replacing it.  Without a `javac` the
       directory holds only the resource;
     - this package's root on its Python workers' PYTHONPATH, so the
-      engine runs from any working directory.
+      engine runs from any working directory;
+    - once the session runs, Hadoop confs without the per-property
+      source trail that every shipped copy would otherwise gzip,
+      property by property (`_drop_property_sources`; values are
+      unchanged).  If the reflection it needs fails, a warning is
+      logged once and the confs keep their sources.
 
     Any other key passed in ``extra_conf`` overrides these defaults.
     """
@@ -251,7 +303,8 @@ def get_spark(app_name: str = "benthos_spark", master: str | None = None,
             os.environ.get("SPARK_GRAFT_CPUS", "32")}
     if master is None and "SPARK_MASTER" in os.environ:
         master = ""  # spark-submit decides
-    if master is None or master.startswith("local"):
+    local = master is None or master.startswith("local")
+    if local:
         cores, heap = _local_defaults(os.environ,
                                       len(os.sched_getaffinity(0)),
                                       os.sysconf("SC_PAGE_SIZE")
@@ -275,4 +328,6 @@ def get_spark(app_name: str = "benthos_spark", master: str | None = None,
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if local:
+        _drop_property_sources(spark)
     return spark

@@ -633,6 +633,47 @@ def _build_input(spark: SparkSession, conf: dict,
 
 # ---------------------------------------------------------------- processors
 
+def _bloblang_keep(df: DataFrame) -> tuple[str, ...]:
+    """The input columns a `bloblang` processor passes through.  The
+    failed-flag survives a mapping unless the mapping assigns it
+    (lib/processor/bloblang.go: the flag is metadata, mappings rewrite
+    the document), and so does the batch bookkeeping, so downstream
+    try/catch and batch-window reads keep working."""
+    return tuple(c for c in df.columns
+                 if c in ("batch_id", "part_index", "_error")
+                 or c.startswith("__branch_"))
+
+
+def _switch_projection(df: DataFrame, cases: list) -> DataFrame | None:
+    """A `switch` over `(check, processors)` cases as one projection
+    (`routing.switch_projection`) when every case has no processors or
+    one `bloblang` processor that compiles columnar; else None, and the
+    caller unions one filtered branch per case.  Pure message frames
+    keep the union: their mappings run in the interpreter."""
+    from benthos_spark.bloblang.compiler import (columnar_projection,
+                                                 is_pure_message)
+    from benthos_spark.operators.routing import switch_projection
+
+    if is_pure_message(df):
+        return None
+    projections = []
+    for cond, procs in cases:
+        procs = procs if isinstance(procs, list) else [procs]
+        if not procs:
+            projections.append(
+                (cond, [(c, F.col(c)) for c in df.columns], None))
+            continue
+        src = (procs[0].get("bloblang") if len(procs) == 1
+               and isinstance(procs[0], dict) and len(procs[0]) == 1
+               else None)
+        proj = (columnar_projection(df, src, keep=_bloblang_keep(df))
+                if isinstance(src, str) else None)
+        if proj is None:
+            return None
+        projections.append((cond, *proj))
+    return switch_projection(df, projections)
+
+
 def _apply_processor(df: DataFrame, conf: Any,
                      ctx: dict | None = None) -> DataFrame:
     from benthos_spark.operators import (bounds_check, dedupe, hash_sample,
@@ -661,16 +702,16 @@ def _apply_processor(df: DataFrame, conf: Any,
             d = _apply_processor(d, p, ctx)
         return d
 
+    def switch(cases: list) -> DataFrame:
+        fused = _switch_projection(df, cases)
+        if fused is not None:
+            return fused
+        return switch_branches(
+            df, [(cond, lambda d, procs=procs: sub(d, procs))
+                 for cond, procs in cases])
+
     if kind == "bloblang":
-        # the failed-flag survives a mapping unless the mapping
-        # assigns it (lib/processor/bloblang.go: the flag is metadata,
-        # mappings rewrite the document) — keep the error channel and
-        # the batch bookkeeping so downstream try/catch and
-        # batch-window reads keep working
-        keep = tuple(c for c in df.columns
-                     if c in ("batch_id", "part_index", "_error")
-                     or c.startswith("__branch_"))
-        return map_text(df, str(spec), keep=keep)
+        return map_text(df, str(spec), keep=_bloblang_keep(df))
     if kind in ("filter", "filter_parts"):
         # v4 check form (Bloblang string) or v3 structured condition
         # (lib/condition/*.go dict schema); filter_parts is the
@@ -705,7 +746,14 @@ def _apply_processor(df: DataFrame, conf: Any,
                             batch_col=spec.get("batch_col"))
     if kind == "switch":
         cases = []
-        for case in spec:
+        for i, case in enumerate(spec):
+            if case.get("fallthrough"):
+                # lib/processor/switch.go: a fallthrough case passes
+                # its output on to the next case's processors
+                raise ConfigError(
+                    f"switch processor case {i}: `fallthrough: true` is "
+                    "not supported; repeat the next case's processors "
+                    "in this case instead")
             # v4 `check:` (Bloblang string) or v3 `condition:`
             # (structured lib/condition schema)
             check = case.get("check")
@@ -717,9 +765,8 @@ def _apply_processor(df: DataFrame, conf: Any,
                 cond = compile_condition_spec(c3, ctx=ctx)
             else:
                 cond = None
-            procs = case.get("processors", [])
-            cases.append((cond, lambda d, procs=procs: sub(d, procs)))
-        return switch_branches(df, cases)
+            cases.append((cond, case.get("processors", [])))
+        return switch(cases)
     if kind == "conditional":
         # v3 conditional (lib/processor/conditional.go): a two-case
         # switch — rows passing `condition` run `processors`, the rest
@@ -728,10 +775,8 @@ def _apply_processor(df: DataFrame, conf: Any,
             compile_condition_spec
         cond = compile_condition_spec(spec.get("condition")
                                       or {"static": True}, ctx=ctx)
-        return switch_branches(df, [
-            (cond, lambda d: sub(d, spec.get("processors", []))),
-            (None, lambda d: sub(d, spec.get("else_processors", []))),
-        ])
+        return switch([(cond, spec.get("processors", [])),
+                       (None, spec.get("else_processors", []))])
     if kind in ("process_map", "process_dag"):
         # v3 precursors of branch/workflow (lib/processor/
         # process_map.go, process_dag.go): premap/postmap path dicts

@@ -2,7 +2,8 @@
 
 A local `get_spark` session puts one directory in front of Spark's jars:
 `NoForkLocalFileSystem` (a `file:` FileSystem whose permission changes
-do not fork `chmod`) and an empty `yarn-default.xml`.
+do not fork `chmod`) and an empty `yarn-default.xml`.  Once it runs, its
+Hadoop confs record no per-property source for default keys.
 """
 
 from __future__ import annotations
@@ -83,6 +84,75 @@ def test_conf_drops_yarn_defaults_and_keeps_mapred_ones(spark):
     assert hconf.get("yarn.resourcemanager.address") is None
     assert hconf.get(
         "mapreduce.fileoutputcommitter.algorithm.version") == "1"
+
+
+def _conf_bytes(jvm, conf) -> int:
+    out = jvm.java.io.ByteArrayOutputStream()
+    conf.write(jvm.java.io.DataOutputStream(out))
+    return out.size()
+
+
+def test_shipped_confs_carry_sources_only_for_set_keys(spark, tmp_path):
+    """After a stream run and a parquet write, the conf Spark copies for
+    each micro-batch and task records a source only for the keys set
+    programmatically, so it serializes small; every other value equals
+    Hadoop's default."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from benthos_spark.stream import run_stream
+
+    src, out = tmp_path / "src", tmp_path / "out"
+    src.mkdir()
+    for i in range(2):
+        pq.write_table(pa.table({"id": list(range(10 * i, 10 * i + 10))}),
+                       src / f"part-{i}.parquet")
+    run_stream(spark, f"""
+    input:
+      file:
+        paths: ["{src}"]
+        format: parquet
+        stream: true
+        max_files_per_trigger: 1
+        schema: "id BIGINT"
+    pipeline:
+      processors:
+        - bloblang: root.id = this.id * 2
+    output:
+      file:
+        path: "{out}"
+        checkpoint: "{out}.checkpoint"
+        timeout: 120
+    """)
+    assert spark.read.parquet(str(out)).count() == 20
+    spark.range(5).write.parquet(str(tmp_path / "written"))
+
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    values, sourced = {}, []
+    it = hconf.iterator()
+    while it.hasNext():
+        e = it.next()
+        values[e.getKey()] = e.getValue()
+        if hconf.getPropertySources(e.getKey()) is not None:
+            sourced.append(e.getKey())
+    assert len(sourced) <= 64, len(sourced)
+    assert _conf_bytes(jvm, hconf) < 40_000
+    # Hadoop's defaults plus what Spark sets: the context's conf as
+    # SparkHadoopUtil builds it, the warehouse dir SharedState adds,
+    # and the session's SQL confs (the keys with a source)
+    want = jvm.org.apache.spark.deploy.SparkHadoopUtil.get() \
+        .newConfiguration(spark.sparkContext._jsc.sc().getConf())
+    want.set("hive.metastore.warehouse.dir",
+             values["hive.metastore.warehouse.dir"])
+    for k in sourced:
+        want.set(k, values[k])
+    it = want.iterator()
+    defaults = {}
+    while it.hasNext():
+        e = it.next()
+        defaults[e.getKey()] = e.getValue()
+    assert values == defaults
 
 
 _STREAM = textwrap.dedent("""

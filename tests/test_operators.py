@@ -88,6 +88,28 @@ def test_switch_branches_routes_and_unions(spark):
     assert got == {1: "odd", 2: "even", 3: "odd", 4: "even"}
 
 
+def test_switch_checkless_case_takes_every_remaining_row(spark):
+    """A case without a check takes every row that reaches it, so later
+    cases are unreachable (the reference's first-match scan); a NULL
+    check counts as false.  The one-projection form agrees."""
+    from benthos_spark.operators.routing import switch_projection
+
+    df = _df(spark, [(1,), (2,), (3,), (4,), (None,)], "id INT")
+    checks = [F.col("id") == 1, None, F.col("id") == 4]
+    lanes = ["one", "rest", "four"]
+    union = switch_branches(df, [
+        (c, lambda d, lane=lane: d.withColumn("lane", F.lit(lane)))
+        for c, lane in zip(checks, lanes)])
+    fused = switch_projection(df, [
+        (c, [("id", F.col("id")), ("lane", F.lit(lane))], None)
+        for c, lane in zip(checks, lanes)])
+    want = [(None, "rest"), (1, "one"), (2, "rest"), (3, "rest"),
+            (4, "rest")]
+    for out in (union, fused):
+        assert sorted((tuple(r) for r in out.collect()),
+                      key=lambda t: (t[0] is not None, t)) == want
+
+
 def test_split_batches_shapes(spark):
     df = spark.range(10).select(F.col("id"))
     out = split_batches(df, 4, [F.col("id")], global_order=True).collect()
