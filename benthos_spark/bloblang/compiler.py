@@ -371,37 +371,6 @@ def _struct_as_map(col: Column, dt) -> Column:
     return F.map_from_arrays(names, vals)
 
 
-def _jsonschema_error_kernel(json_col: Column, schema: dict) -> Column:
-    """First validation error message per JSON payload, NULL when
-    valid (Arrow-batched; the jsonschema package is Python-only)."""
-    import json as _json_mod
-
-    from pyspark.sql.functions import pandas_udf
-
-    schema_src = _json_mod.dumps(schema)
-
-    @pandas_udf("string")
-    def check(payloads):
-        import json
-
-        import jsonschema
-
-        validator = jsonschema.Draft7Validator(json.loads(schema_src))
-
-        def one(p):
-            if p is None:
-                return "null payload"
-            try:
-                errs = sorted(validator.iter_errors(json.loads(p)),
-                              key=lambda e: list(e.path))
-            except ValueError as e:
-                return f"invalid JSON: {e}"
-            return errs[0].message if errs else None
-        return payloads.map(one)
-
-    return check(json_col)
-
-
 def _java_re(pat: str) -> str:
     """Go (RE2) named-group syntax `(?P<n>...)` → Java `(?<n>...)` so
     reference patterns run unchanged on the JVM regex engine."""
@@ -2078,11 +2047,13 @@ def _compile_method(node: ast.Method, scope: Scope) -> Column:
 
         from pyspark.sql import types as T
 
+        from benthos_spark.operators.parsing import jsonschema_error_col
+
         schema = _json_mod.loads(str(arg_lit(0, "schema")))
         as_json = (target if isinstance(_dtype(target, scope, node.target),
                                         T.StringType)
                    else F.to_json(target))
-        err_col = _jsonschema_error_kernel(as_json, schema)
+        err_col = jsonschema_error_col(as_json, schema)
         return F.when(err_col.isNull(), target).otherwise(
             F.raise_error(F.concat(F.lit("json_schema: "), err_col)))
     if name == "sum":
@@ -2315,7 +2286,7 @@ class MappingExec:
                 scope.maps[stmt.name] = stmt.statements
         meta_updates: list[tuple[str | None, Column]] = []
         drop_cond: Column | None = None
-        identity_base = False
+        identity: dict[str, Column] = {}  # row-mode `root = this` copies
 
         for stmt in self.mapping.statements:
             if isinstance(stmt, ast.MapDef):
@@ -2346,7 +2317,6 @@ class MappingExec:
                     continue
                 if not stmt.path:
                     if isinstance(value, str) and value == "__identity__":
-                        identity_base = True
                         scope.root_fields.clear()
                         tdt = _this_dtype(scope)
                         if tdt is not None and hasattr(tdt, "fields"):
@@ -2356,8 +2326,8 @@ class MappingExec:
                                 scope.root_fields[f.name] = \
                                     this[f.name]
                         else:
-                            for c in df.columns:
-                                scope.root_fields[c] = F.col(c)
+                            identity = {c: F.col(c) for c in df.columns}
+                            scope.root_fields.update(identity)
                     else:
                         # whole-document `root = <expr>`: expand when
                         # the expression is struct-typed at compile
@@ -2412,12 +2382,22 @@ class MappingExec:
 
         keep_names = [k for k in keep
                       if k in df.columns and k not in scope.root_fields]
+
+        def carried(name: str) -> bool:
+            """The input column passes through: kept, or still the
+            unmodified copy a `root = this` made."""
+            return name in keep_names or (
+                name in identity and scope.root_fields.get(name)
+                is identity[name])
+
         # message shape: meta assignments update the meta MAP in place
         # (set / per-key delete / whole replace / whole wipe —
-        # mapping/assignment.go:71); row mode without a meta column
+        # mapping/assignment.go:71); row mode without a meta map
         # keeps the meta_<key> rider-column contract
         meta_final: Column | None = None
-        if meta_updates and "meta" in keep_names:
+        if meta_updates and carried("meta") and \
+                df.schema["meta"].dataType.simpleString() \
+                == "map<string,string>":
             def key_neq(key):
                 return lambda k, _v: k != F.lit(key)
 
@@ -2445,11 +2425,15 @@ class MappingExec:
                 and ERROR_COL not in keep_names \
                 and ERROR_COL not in scope.root_fields:
             keep_names.append(ERROR_COL)
-        if scope.error_conds and ERROR_COL in keep_names:
+        if scope.error_conds and carried(ERROR_COL):
             err_final = F.col(ERROR_COL)
             for cond, msgc in scope.error_conds:
                 err_final = F.coalesce(
                     err_final, F.when(cond, msgc.cast("string")))
+        # a carried identity copy takes its update in place
+        for name, final in (("meta", meta_final), (ERROR_COL, err_final)):
+            if final is not None and name not in keep_names:
+                scope.root_fields[name] = final
         cols = []
         for k in keep_names:
             if k == "meta" and meta_final is not None:
@@ -2467,7 +2451,6 @@ class MappingExec:
             for key, val in meta_updates:
                 if val is not None:
                     cols.append((f"meta_{key or 'root'}", val.cast("string")))
-        _ = identity_base
         return cols, drop_cond
 
     def _root_value(self, stmt: ast.RootAssign, scope: Scope,
@@ -2670,104 +2653,34 @@ def mapping_needs_dynamic(mapping: ast.Mapping) -> bool:
 def map_dynamic(df: DataFrame, src: str,
                 base_dir: str = ".") -> DataFrame:
     """Content-doctrine fallback executor: interpret the mapping
-    per-document in an Arrow-batched kernel.  Used when the mapping is
-    not statically compilable (recursive named maps).  The frame must
-    carry a `content` column; `meta` rides along when present.  On a
-    runtime evaluation error the part keeps its content and the
-    `_error` column is set when available (error-flag protocol,
-    lib/processor/bloblang.go)."""
+    per-document through `datamodel.map_messages`.  Used when the
+    mapping is not statically compilable (recursive named maps).  The
+    frame must carry a `content` column; `meta` rides along when
+    present.  ANY per-message evaluation error flags the part and
+    passes the original through (lib/processor/bloblang.go): it never
+    fails the task.  Cross-part reads (.from/.from_all/batch_index/
+    batch_size) co-locate whole batches — the same shuffle the static
+    window compilation pays."""
     from benthos_spark.bloblang.interp import (DynamicMapping,
-                                               EvalError,
                                                uses_batch_context)
     from benthos_spark.bloblang.parser import parse_mapping as _pm
+    from benthos_spark.datamodel import map_messages
 
     parsed = _pm(src, base_dir=base_dir)
     dyn = DynamicMapping(parsed)
-    schema = df.schema
-    has_meta = "meta" in df.columns
-    has_err = "_error" in df.columns
 
-    if uses_batch_context(parsed) and "batch_id" in df.columns \
-            and "part_index" in df.columns:
-        # cross-part reads (.from/.from_all/batch_index/batch_size):
-        # co-locate whole batches — one applyInPandas group per
-        # batch_id, parts ordered by part_index (the same shuffle the
-        # static window compilation pays)
-        def grouped(pdf):
-            import pandas as pd
-            pdf = pdf.sort_values("part_index").reset_index(drop=True)
-            batch = [{"content": pdf["content"].iloc[i],
-                      "meta": (dict(pdf["meta"].iloc[i] or {})
-                               if has_meta else {}),
-                      "error": (pdf["_error"].iloc[i]
-                                if has_err else None)}
-                     for i in range(len(pdf))]
-            keep, contents, metas, errs = [], [], [], []
-            for i, p in enumerate(batch):
-                err = None
-                try:
-                    out_c, out_m = dyn.run_one(
-                        p["content"], p["meta"], error=p["error"],
-                        batch=batch, part_index=i)
-                except Exception as exc:  # noqa: BLE001
-                    out_c, out_m, err = (p["content"], p["meta"],
-                                         str(exc) or repr(exc))
-                if out_c is None:
-                    continue
-                keep.append(i)
-                contents.append(out_c)
-                metas.append({str(k): str(v) for k, v in out_m.items()})
-                errs.append(err)
-            out = pdf.iloc[keep].copy()
-            if keep:
-                out["content"] = contents
-                if has_meta:
-                    out["meta"] = metas
-                if has_err:
-                    out["_error"] = [e if e is not None else old
-                                     for e, old in zip(errs,
-                                                       out["_error"])]
-            return out
+    def one(content, meta, error, **ctx):
+        try:
+            out_c, out_m = dyn.run_one(content, meta, error=error, **ctx)
+        except Exception as exc:  # noqa: BLE001 — see the docstring
+            return [(content, meta, str(exc) or repr(exc))]
+        if out_c is None:
+            return []  # root = deleted()
+        return [(out_c, {str(k): str(v) for k, v in out_m.items()}, None)]
 
-        return df.groupBy("batch_id").applyInPandas(grouped,
-                                                    schema=schema)
-
-    def op(batches):
-        for pdf in batches:
-            keep, contents, metas, errs = [], [], [], []
-            for i in range(len(pdf)):
-                c = pdf["content"].iloc[i]
-                m = (dict(pdf["meta"].iloc[i] or {})
-                     if has_meta else {})
-                err = None
-                try:
-                    out_c, out_m = dyn.run_one(
-                        c, m, error=(pdf["_error"].iloc[i]
-                                     if has_err else None))
-                except Exception as exc:  # noqa: BLE001 — reference
-                    # contract: ANY per-message evaluation error flags
-                    # the message and passes the original through
-                    # (lib/processor/bloblang.go), it never fails the
-                    # task
-                    out_c, out_m, err = c, m, str(exc) or repr(exc)
-                if out_c is None:
-                    continue  # root = deleted()
-                keep.append(i)
-                contents.append(out_c)
-                metas.append({str(k): str(v) for k, v in out_m.items()})
-                errs.append(err)
-            out = pdf.iloc[keep].copy()
-            if keep:  # empty assignment would retype map columns
-                out["content"] = contents
-                if has_meta:
-                    out["meta"] = metas
-                if has_err:
-                    out["_error"] = [
-                        e if e is not None else old
-                        for e, old in zip(errs, out["_error"])]
-            yield out
-
-    return df.mapInPandas(op, schema=schema)
+    return map_messages(df, one, whole_batches=uses_batch_context(parsed)
+                        and "batch_id" in df.columns
+                        and "part_index" in df.columns)
 
 
 def is_pure_message(df: DataFrame) -> bool:

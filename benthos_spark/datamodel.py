@@ -18,6 +18,13 @@ lib/message/part.go:26-30).  Here a part is one row:
 Typed/relational DataFrames (parquet tables) are first-class too — the
 engine's operators work on either shape; the message shape is only
 required by batch-aware operators (batch_index/from_all/archive/...).
+
+Fail-flag protocol of the content-doctrine processors (json, text,
+metadata, number, grok, parse_log, unarchive, interpreted bloblang,
+awk, jq, xml — all run per message through `map_messages`): a part
+that fails keeps its content and carries the error string in `_error`;
+a new error replaces an old one, and `_error` is always present in the
+output, added as NULL when the input frame lacked it.
 """
 
 from __future__ import annotations
@@ -110,3 +117,75 @@ def with_error(df: DataFrame, cond: Column, message: Column | str) -> DataFrame:
 def errored() -> Column:
     """``errored()`` — functions.go:298."""
     return F.col(ERROR_COL).isNotNull()
+
+
+def map_messages(df: DataFrame, fn, *, whole_batches: bool = False
+                 ) -> DataFrame:
+    """Run ``fn`` once per part (row) of ``df``, Arrow-batched.
+
+    ``fn(content, meta, error)`` gets the part's `content`, its `meta`
+    as a fresh dict (``{}`` when the frame has no `meta` column) and
+    its `_error`, and returns a list of ``(content, meta, error)``:
+    ``[]`` drops the part, one item replaces it, several split it (the
+    outputs' `part_index` becomes 0..n-1).  Each output's error is the
+    part's new error, or None to keep the old one.  Every other column
+    passes through; `meta` is written back only when the frame has it;
+    `_error` is added when the frame lacks it.  The kernel catches
+    nothing: a caller turns its own failures into error strings.
+
+    With ``whole_batches`` the parts of one `batch_id` are processed
+    together, in `part_index` order, and ``fn`` also gets ``batch`` (a
+    list of ``{"content", "meta", "error"}`` dicts, one per part) and
+    ``part_index`` (the part's position in it)."""
+    has_meta = META_COL in df.columns
+    has_err = ERROR_COL in df.columns
+    has_index = PART_INDEX_COL in df.columns
+    schema = df.schema if has_err else T.StructType(
+        df.schema.fields + [T.StructField(ERROR_COL, T.StringType())])
+
+    def run(pdf):
+        n = len(pdf)
+        contents = pdf[CONTENT_COL].tolist()
+        metas = ([dict(m) if m is not None else {} for m in pdf[META_COL]]
+                 if has_meta else [{} for _ in range(n)])
+        errors = pdf[ERROR_COL].tolist() if has_err else [None] * n
+        if whole_batches:
+            batch = [{"content": c, "meta": m, "error": e}
+                     for c, m, e in zip(contents, metas, errors)]
+        take, out_c, out_m, out_e, out_i = [], [], [], [], []
+        reshaped = split = False
+        for i, (c, m, e) in enumerate(zip(contents, metas, errors)):
+            outs = (fn(c, m, e, batch=batch, part_index=i)
+                    if whole_batches else fn(c, m, e))
+            if len(outs) != 1:
+                reshaped = True
+                split = split or len(outs) > 1
+            for j, (c2, m2, e2) in enumerate(outs):
+                take.append(i)
+                out_c.append(c2)
+                out_m.append(m2)
+                out_e.append(e if e2 is None else e2)
+                out_i.append(j if len(outs) > 1 else None)
+        out = pdf.take(take) if reshaped else pdf
+        if not take:  # assigning [] would retype the map columns
+            return out if has_err else out.assign(**{ERROR_COL: None})
+        out[CONTENT_COL] = out_c
+        out[ERROR_COL] = out_e
+        if has_meta:
+            out[META_COL] = out_m
+        if split and has_index:
+            out[PART_INDEX_COL] = [p if j is None else j for j, p
+                                   in zip(out_i, out[PART_INDEX_COL])]
+        return out
+
+    if whole_batches:
+        def grouped(pdf):
+            return run(pdf.sort_values(PART_INDEX_COL, kind="stable")
+                       if has_index else pdf)
+        return df.groupBy(BATCH_COL).applyInPandas(grouped, schema=schema)
+
+    def batches(pdfs):
+        for pdf in pdfs:
+            yield run(pdf)
+
+    return df.mapInPandas(batches, schema=schema)

@@ -9,11 +9,12 @@ non-zero exit / execution errors flag the message and pass the
 original through).
 
 Spark shape: the program compiles ONCE at config time (driver) and the
-AST ships to executors; execution is an Arrow-batched mapInPandas, one
-message per interpreter instance — the per-record imperative semantics
-are the operator's substance, so this is the documented Pandas-UDF
-slow path (COVERAGE.md doctrine).  Custom RS values are out of scope
-(records split on newlines, matching the reference's default)."""
+AST ships to executors; execution runs per message through
+`datamodel.map_messages` (Arrow-batched), one interpreter instance per
+message — the per-record imperative semantics are the operator's
+substance, so this is the documented Pandas-UDF slow path (COVERAGE.md
+doctrine).  Custom RS values are out of scope (records split on
+newlines, matching the reference's default)."""
 
 from __future__ import annotations
 
@@ -23,6 +24,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from benthos_spark.datamodel import CONTENT_COL, map_messages
 from benthos_spark.operators.awk_lang import (AwkError, Interp, _to_num,
                                               _to_str, parse_program)
 
@@ -442,42 +444,14 @@ def run_awk_message(ast, codec: str, content: str,
         return content, meta, f"awk runtime error: {exc}"
 
 
-def awk_process(df: DataFrame, program: str, codec: str = "text",
-                content_col: str = "content",
-                meta_col: str = "meta") -> DataFrame:
-    """awk processor over a frame: compile once, execute per message in
-    an Arrow-batched mapInPandas (awk.go IteratePartsWithSpan)."""
+def awk_process(df: DataFrame, program: str,
+                codec: str = "text") -> DataFrame:
+    """awk processor over a frame: compile once, execute per message
+    through `datamodel.map_messages` (awk.go IteratePartsWithSpan)."""
     if codec not in _CODECS:
         raise AwkError(f"unrecognised codec: {codec}")
     ast = parse_program(program)  # config-time compile errors surface here
-    if content_col not in df.columns:
-        raise AwkError(f"awk: missing column {content_col!r}")
-    has_meta = meta_col in df.columns
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    if "_error" not in df.columns:
-        schema += ", `_error` string"
-
-    def run(batches):
-        for pdf in batches:
-            contents, metas, errs = [], [], []
-            metas_in = (pdf[meta_col] if has_meta
-                        else [{}] * len(pdf))
-            for content, meta in zip(pdf[content_col], metas_in):
-                meta = dict(meta) if meta is not None else {}
-                c, m, e = run_awk_message(ast, codec, content, meta)
-                contents.append(c)
-                metas.append(m)
-                errs.append(e)
-            out = pdf.copy()
-            out[content_col] = contents
-            if has_meta:
-                out[meta_col] = metas
-            if "_error" in pdf.columns:
-                out["_error"] = [e if e is not None else prev for e, prev
-                                 in zip(errs, out["_error"])]
-            else:
-                out["_error"] = errs
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
+    if CONTENT_COL not in df.columns:
+        raise AwkError(f"awk: missing column {CONTENT_COL!r}")
+    return map_messages(df, lambda content, meta, error: [
+        run_awk_message(ast, codec, content, meta)])

@@ -278,28 +278,14 @@ def compile_condition_spec(spec: Any, content: Column | None = None,
         # processor form, boolean instead of the error column
         import json as _json
 
-        import jsonschema as _js
-        from pyspark.sql.functions import pandas_udf
+        from benthos_spark.operators.parsing import jsonschema_error_col
         schema_doc = conf.get("schema")
         if not schema_doc and conf.get("schema_path"):
             with open(str(conf["schema_path"])) as fh:
                 schema_doc = fh.read()
-        validator = _js.Draft7Validator(
+        return jsonschema_error_col(F.col("content"), (
             _json.loads(schema_doc) if isinstance(schema_doc, str)
-            else (schema_doc or {}))
-
-        @pandas_udf("boolean")
-        def valid(payloads):
-            def one(p):
-                if p is None:
-                    return False
-                try:
-                    return not any(validator.iter_errors(_json.loads(p)))
-                except ValueError:
-                    return False
-            return payloads.map(one)
-
-        return valid(F.col("content"))
+            else (schema_doc or {}))).isNull()
     if kind == "processor_failed":
         return F.col(ERROR_COL).isNotNull()
     if kind == "not":

@@ -13,9 +13,9 @@ Spark-first split:
   — one JVM-side Project, whole-stage codegen, no Python.
 - **General queries** run a small jq interpreter (streaming semantics:
   every expression maps one value to a *stream* of values, pipes compose
-  streams) inside ONE Arrow-batched pandas iterator — the documented slow
-  path, same shape as the reference's per-message gojq closure but
-  vectorized over record batches.
+  streams) per message through `datamodel.map_messages` — the
+  documented slow path, same shape as the reference's per-message gojq
+  closure but Arrow-batched over record batches.
 
 Supported surface: identity, field access (+ optional `?`), indexing,
 iteration `[]`, recursive descent `..`, pipe `|`, comma `,`, `select`,
@@ -60,8 +60,10 @@ from dataclasses import dataclass
 from itertools import product
 from typing import Any, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from benthos_spark.datamodel import CONTENT_COL, ERROR_COL, map_messages
 
 __all__ = ["JQCompileError", "JQError", "parse_jq", "jq_eval_text",
            "jq_static_path", "jq_transform"]
@@ -1882,14 +1884,15 @@ def jq_static_path(prog: N) -> str | None:
 
 # ---------------------------------------------------------------- operator
 
-def jq_transform(df: DataFrame, query: str, content: str = "content",
-                 raw: bool = False, error_col: str = "_error") -> DataFrame:
+def jq_transform(df: DataFrame, query: str,
+                 raw: bool = False) -> DataFrame:
     """The `jq` processor as a DataFrame transform.
 
     Pure path queries stay JVM-side (variant extraction, codegen); general
-    queries run the interpreter in one Arrow-batched pandas UDF. Reference
-    semantics (jq.go): no value → row filtered; multiple values → array;
-    runtime error → content unchanged + `error_col` set.
+    queries run the interpreter per message through
+    `datamodel.map_messages`. Reference semantics (jq.go): no value →
+    row filtered; multiple values → array; runtime error → content
+    unchanged + `_error` set.
     """
     prog = parse_jq(query)
     segs = None if raw else _static_segments(prog)
@@ -1899,7 +1902,7 @@ def jq_transform(df: DataFrame, query: str, content: str = "content",
         # error → content unchanged + error flag, exactly like the
         # interpreter tier (divergence originally caught by the
         # tier-equivalence property test).
-        v = F.try_parse_json(F.col(content))
+        v = F.try_parse_json(F.col(CONTENT_COL))
         err = v.isNull()  # invalid JSON or NULL content
         prefix = "$"
         for kind, val in segs:
@@ -1915,56 +1918,22 @@ def jq_transform(df: DataFrame, query: str, content: str = "content",
         # both columns must evaluate against the ORIGINAL content —
         # chained withColumn would re-resolve `err` on the rewritten one
         res = df.withColumns({
-            "__jq_out": F.when(err, F.col(content)).otherwise(out),
+            "__jq_out": F.when(err, F.col(CONTENT_COL)).otherwise(out),
             "__jq_err": F.when(err, F.lit(
                 f"jq: cannot index value in path {prefix}"))})
-        res = res.withColumn(content, F.col("__jq_out"))
-        if error_col in df.columns:
-            res = res.withColumn(error_col, F.coalesce(
-                F.col("__jq_err"), F.col(error_col)))
+        res = res.withColumn(CONTENT_COL, F.col("__jq_out"))
+        if ERROR_COL in df.columns:
+            res = res.withColumn(ERROR_COL, F.coalesce(
+                F.col("__jq_err"), F.col(ERROR_COL)))
         else:
-            res = res.withColumn(error_col, F.col("__jq_err"))
+            res = res.withColumn(ERROR_COL, F.col("__jq_err"))
         return res.drop("__jq_out", "__jq_err")
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    def one(content, meta, error):
+        try:
+            res = jq_eval_text(prog, content, raw=raw, metadata=meta)
+        except JQError as e:
+            return [(content, meta, f"jq: {e}")]
+        return [] if res is None else [(res, meta, None)]
 
-    has_meta = "meta" in df.columns
-
-    # NOTE: no type annotations on the UDF — `from __future__ import
-    # annotations` turns them into strings pandas_udf cannot resolve.
-    @pandas_udf("struct<content:string,filtered:boolean,error:string>")
-    def run(content_s, meta_s):
-        new_c, filt, errs = [], [], []
-        for text, md in zip(content_s, meta_s):
-            try:
-                res = jq_eval_text(prog, text, raw=raw,
-                                   metadata=dict(md) if md is not None
-                                   else {})
-                new_c.append(text if res is None else res)
-                filt.append(res is None)
-                errs.append(None)
-            except JQError as e:
-                new_c.append(text)
-                filt.append(False)
-                errs.append(f"jq: {e}")
-        return pd.DataFrame(
-            {"content": new_c, "filtered": filt, "error": errs})
-
-    meta_col = F.col("meta") if has_meta else \
-        F.create_map().cast("map<string,string>")
-    # asNondeterministic: the filter on __jq.filtered below otherwise
-    # gets pushed beneath the projection and the optimizer DUPLICATES
-    # the UDF — every surviving row paid the interpreter twice (two
-    # ArrowEvalPython nodes in the r9 plan; guide §4.4).  The
-    # interpreter is pure; the marker only forbids reordering/copying.
-    res = df.withColumn(
-        "__jq", run.asNondeterministic()(F.col(content), meta_col))
-    res = res.filter(~F.col("__jq.filtered"))
-    res = res.withColumn(content, F.col("__jq.content"))
-    if error_col in df.columns:
-        res = res.withColumn(
-            error_col, F.coalesce(F.col("__jq.error"), F.col(error_col)))
-    else:
-        res = res.withColumn(error_col, F.col("__jq.error"))
-    return res.drop("__jq")
+    return map_messages(df, one)

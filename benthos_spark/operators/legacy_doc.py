@@ -7,50 +7,48 @@ Bloblang; modern configs use mappings (the compiled fast path), but a
 migrating v3 config still carries them, and their semantics are
 per-document dynamic — one batch may hold conflicting JSON shapes, so
 they run through the dynamic-document interpreter (bloblang/interp.py)
-in an Arrow-batched kernel rather than schema inference.
+in the per-message kernel (`datamodel.map_messages`) rather than schema
+inference.
 """
 
 from __future__ import annotations
 
 import json as _json
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from benthos_spark.datamodel import map_messages
+
+_JSON_OPS = ("set", "flatten", "flatten_array", "fold_number_array",
+             "fold_string_array", "select", "split", "copy", "move",
+             "delete", "append", "clean", "explode")
+_TEXT_OPS = ("set", "append", "prepend", "to_upper", "to_lower", "trim",
+             "trim_space", "quote", "unquote", "replace", "replace_regexp",
+             "strip_html", "find_regexp", "regexp_expand",
+             "escape_url_query", "unescape_url_query")
 
 
-def _doc_kernel(df: DataFrame, fn, flag_errors: bool = False):
-    """mapInPandas over (content, meta) preserving all other columns;
-    fn(content_str, meta_dict) -> new content_str.  With
-    `flag_errors`, an _OpError keeps the original content and sets
-    `_error` (IteratePartsWithSpan fail-flag protocol)."""
-    import pandas as pd
+def _check_operator(kind: str, op: str, known: tuple) -> None:
+    """Unknown operators fail while the pipeline is built, not inside a
+    Spark task."""
+    if op not in known:
+        from benthos_spark.stream import ConfigError
+        raise ConfigError(f"{kind} processor operator {op!r} unknown: "
+                          f"use {'|'.join(known)}")
 
-    _ = pd
-    schema = df.schema
-    has_err = "_error" in df.columns
 
-    def op(batches):
-        for pdf in batches:
-            metas = pdf["meta"] if "meta" in pdf.columns else None
-            out, errs = [], []
-            for i, c in enumerate(pdf["content"]):
-                meta = (metas.iloc[i] if metas is not None else {}) or {}
-                try:
-                    out.append(fn(c, dict(meta)))
-                    errs.append(None)
-                except _OpError as e:
-                    if not flag_errors:
-                        raise
-                    out.append(c)
-                    errs.append(str(e))
-            pdf = pdf.copy()
-            pdf["content"] = out
-            if flag_errors and has_err and len(pdf):
-                pdf["_error"] = [e if e is not None else old
-                                 for e, old in zip(errs, pdf["_error"])]
-            yield pdf
+def _content_stage(df: DataFrame, fn,
+                   whole_batches: bool = False) -> DataFrame:
+    """`map_messages` with fn(content, meta[, batch, part_index]) ->
+    new content; an _OpError keeps the content and flags the part
+    (IteratePartsWithSpan fail-flag protocol)."""
+    def one(content, meta, error, **ctx):
+        try:
+            return [(fn(content, meta, **ctx), meta, None)]
+        except _OpError as e:
+            return [(content, meta, str(e))]
 
-    return df.mapInPandas(op, schema=schema)
+    return map_messages(df, one, whole_batches=whole_batches)
 
 
 class _OpError(ValueError):
@@ -174,6 +172,7 @@ def json_stage(df: DataFrame, spec: dict) -> DataFrame:
     from benthos_spark.bloblang.interp import compile_template
 
     op = str(spec.get("operator", "set"))
+    _check_operator("json", op, _JSON_OPS)
     raw_path = str(spec.get("path", ""))
     path = [] if raw_path in ("", ".") else raw_path.split(".")
     raw_value = spec.get("value")
@@ -370,7 +369,6 @@ def json_stage(df: DataFrame, spec: dict) -> DataFrame:
             raise _OpError(
                 "target value was not an array or a map, found: "
                 f"{type(target).__name__}")
-        raise ValueError(f"json processor operator {op!r} unknown")
 
     def one(content, meta):
         try:
@@ -386,74 +384,35 @@ def json_stage(df: DataFrame, spec: dict) -> DataFrame:
             return str(out)
         return _jdumps(out)
 
-    return _doc_kernel(df, one, flag_errors=True)
+    return _content_stage(df, one)
 
 
 def unarchive_content_stage(df: DataFrame, fmt: str) -> DataFrame:
     """`unarchive` in its content-doctrine form (lib/processor/
-    unarchive.go): one payload becomes N parts.  Row-expanding Arrow
-    kernel; part_index renumbers within each source row's batch."""
-    import pandas as pd
+    unarchive.go): one payload becomes N parts, renumbered 0..N-1."""
+    if fmt not in ("lines", "json_array", "json_map"):
+        raise ValueError(f"unarchive format {fmt!r}: content-doctrine "
+                         "subset is lines|json_array|json_map")
 
-    _ = pd
-    schema = df.schema
-    has_meta = "meta" in df.columns
+    def part(v):
+        return v if isinstance(v, str) else _json.dumps(
+            v, separators=(",", ":"), sort_keys=True, ensure_ascii=False)
 
-    def op(batches):
-        import pandas as pd
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                c = row["content"]
-                if fmt == "lines":
-                    parts = [(ln, None) for ln in (c or "").split("\n")
-                             if ln]
-                elif fmt == "json_array":
-                    try:
-                        arr = _json.loads(c)
-                    except ValueError:
-                        arr = None
-                    if not isinstance(arr, list):
-                        parts = [(c, None)]
-                    else:
-                        parts = [(x if isinstance(x, str)
-                                  else _json.dumps(
-                                      x, separators=(",", ":"),
-                                      sort_keys=True,
-                                      ensure_ascii=False), None)
-                                 for x in arr]
-                elif fmt == "json_map":
-                    try:
-                        obj = _json.loads(c)
-                    except ValueError:
-                        obj = None
-                    if not isinstance(obj, dict):
-                        parts = [(c, None)]
-                    else:
-                        parts = [(v if isinstance(v, str)
-                                  else _json.dumps(
-                                      v, separators=(",", ":"),
-                                      sort_keys=True,
-                                      ensure_ascii=False), k)
-                                 for k, v in sorted(obj.items())]
-                else:
-                    raise ValueError(
-                        f"unarchive format {fmt!r}: content-doctrine "
-                        "subset is lines|json_array|json_map")
-                for i, (content, key) in enumerate(parts):
-                    new = row.copy()
-                    new["content"] = content
-                    if "part_index" in pdf.columns:
-                        new["part_index"] = i
-                    if key is not None and has_meta:
-                        m = dict(new["meta"] or {})
-                        m["archive_key"] = key
-                        new["meta"] = m
-                    out_rows.append(new)
-            yield pd.DataFrame(out_rows, columns=pdf.columns) \
-                if out_rows else pdf.iloc[0:0]
+    def one(c, meta, error):
+        if fmt == "lines":
+            return [(ln, meta, None) for ln in (c or "").split("\n") if ln]
+        try:
+            doc = _json.loads(c)
+        except (TypeError, ValueError):
+            doc = None
+        if fmt == "json_array" and isinstance(doc, list):
+            return [(part(x), meta, None) for x in doc]
+        if fmt == "json_map" and isinstance(doc, dict):
+            return [(part(v), {**meta, "archive_key": k}, None)
+                    for k, v in sorted(doc.items())]
+        return [(c, meta, None)]
 
-    return df.mapInPandas(op, schema=schema)
+    return map_messages(df, one)
 
 
 def number_stage(df: DataFrame, spec: dict) -> DataFrame:
@@ -496,50 +455,10 @@ def number_stage(df: DataFrame, spec: dict) -> DataFrame:
                 f"failed to parse content into number: {e}") from e
         return _fmt(base + operand if op == "add" else base - operand)
 
-    if isinstance(raw, str) and _re.search(
-            r"batch_size|batch_index|\.from", raw) \
-            and "batch_id" in df.columns:
-        return _batch_kernel(df, one)
-    return _doc_kernel(df, one, flag_errors=True)
-
-
-def _batch_kernel(df: DataFrame, fn):
-    """Grouped variant of _doc_kernel: whole batches co-located so
-    fn sees (content, meta, batch, part_index)."""
-    import pandas as pd
-
-    _ = pd
-    schema = df.schema
-    has_meta = "meta" in df.columns
-    has_err = "_error" in df.columns
-
-    def grouped(pdf):
-        if "part_index" in pdf.columns:
-            pdf = pdf.sort_values("part_index").reset_index(drop=True)
-        batch = [{"content": pdf["content"].iloc[i],
-                  "meta": (dict(pdf["meta"].iloc[i] or {})
-                           if has_meta else {}),
-                  "error": (pdf["_error"].iloc[i] if has_err else None)}
-                 for i in range(len(pdf))]
-        out, errs = [], []
-        for i, p in enumerate(batch):
-            try:
-                out.append(fn(p["content"], p["meta"], batch=batch,
-                              part_index=i))
-                errs.append(None)
-            except _OpError as e:
-                out.append(p["content"])
-                errs.append(str(e))
-        pdf = pdf.copy()
-        if len(pdf):
-            pdf["content"] = out
-            if has_err:
-                pdf["_error"] = [e if e is not None else old
-                                 for e, old in zip(errs,
-                                                   pdf["_error"])]
-        return pdf
-
-    return df.groupBy("batch_id").applyInPandas(grouped, schema=schema)
+    return _content_stage(
+        df, one, whole_batches=isinstance(raw, str) and bool(_re.search(
+            r"batch_size|batch_index|\.from", raw))
+        and "batch_id" in df.columns)
 
 
 def parse_log_stage(df: DataFrame, spec: dict) -> DataFrame:
@@ -559,7 +478,7 @@ def parse_log_stage(df: DataFrame, spec: dict) -> DataFrame:
             raise _OpError(f"failed to parse log as {fmt}")
         return _jdumps(doc)
 
-    return _doc_kernel(df, one, flag_errors=True)
+    return _content_stage(df, one)
 
 
 def grok_stage(df: DataFrame, spec: dict) -> DataFrame:
@@ -585,7 +504,7 @@ def grok_stage(df: DataFrame, spec: dict) -> DataFrame:
             raise _OpError("grok patterns did not match payload")
         return _jdumps(doc)
 
-    return _doc_kernel(df, one, flag_errors=True)
+    return _content_stage(df, one)
 
 
 def _go_expand(m, tmpl: str) -> str:
@@ -609,52 +528,35 @@ def metadata_stage(df: DataFrame, spec: dict) -> DataFrame:
     """`metadata` processor (lib/processor/metadata.go): set / delete /
     delete_all / delete_prefix over the part's metadata, with `key` and
     `value` interpolated per document."""
-    import pandas as pd
-
     from benthos_spark.bloblang.interp import compile_template
 
-    _ = pd
     op = str(spec.get("operator", "set"))
-    if op not in ("set", "delete", "delete_all", "delete_prefix"):
-        raise ValueError(f"metadata operator {op!r}: "
-                         "set|delete|delete_all|delete_prefix")
+    _check_operator("metadata", op,
+                    ("set", "delete", "delete_all", "delete_prefix"))
     render_key = compile_template(str(spec.get("key", "")))
     render_val = compile_template(str(spec.get("value", "")))
     if "meta" not in df.columns:
         raise ValueError("metadata processor needs a `meta` column "
                          "(message doctrine)")
-    schema = df.schema
 
-    def kernel(batches):
-        for pdf in batches:
-            metas = []
-            for i in range(len(pdf)):
-                content = pdf["content"].iloc[i] \
-                    if "content" in pdf.columns else None
-                meta = dict(pdf["meta"].iloc[i] or {})
-                try:
-                    doc = _json.loads(content) if content else None
-                except ValueError:
-                    doc = None
-                key = render_key(doc, meta, content)
-                if op == "set":
-                    meta[key] = render_val(doc, meta, content)
-                elif op == "delete":
-                    tgt = key or render_val(doc, meta, content)
-                    meta.pop(tgt, None)
-                elif op == "delete_all":
-                    meta = {}
-                elif op == "delete_prefix":
-                    pfx = key or render_val(doc, meta, content)
-                    meta = {k: v for k, v in meta.items()
-                            if not k.startswith(pfx)}
-                metas.append(meta)
-            pdf = pdf.copy()
-            if len(pdf):
-                pdf["meta"] = metas
-            yield pdf
+    def one(content, meta, error):
+        try:
+            doc = _json.loads(content) if content else None
+        except ValueError:
+            doc = None
+        key = render_key(doc, meta, content)
+        if op == "set":
+            meta[key] = render_val(doc, meta, content)
+        elif op == "delete":
+            meta.pop(key or render_val(doc, meta, content), None)
+        elif op == "delete_all":
+            meta = {}
+        else:  # delete_prefix
+            pfx = key or render_val(doc, meta, content)
+            meta = {k: v for k, v in meta.items() if not k.startswith(pfx)}
+        return [(content, meta, None)]
 
-    return df.mapInPandas(kernel, schema=schema)
+    return map_messages(df, one)
 
 
 def text_stage(df: DataFrame, spec: dict) -> DataFrame:
@@ -663,6 +565,7 @@ def text_stage(df: DataFrame, spec: dict) -> DataFrame:
     from benthos_spark.bloblang.interp import compile_template
 
     op = str(spec.get("operator", "set"))
+    _check_operator("text", op, _TEXT_OPS)
     raw_value = str(spec.get("value", ""))
     render = compile_template(raw_value)
 
@@ -718,14 +621,7 @@ def text_stage(df: DataFrame, spec: dict) -> DataFrame:
         if op == "escape_url_query":
             from urllib.parse import quote_plus
             return quote_plus(content or "")
-        if op == "unescape_url_query":
-            from urllib.parse import unquote_plus
-            return unquote_plus(content or "")
-        raise ValueError(
-            f"text processor operator {op!r}: supported subset is "
-            "set|append|prepend|to_upper|to_lower|trim|trim_space|"
-            "quote|unquote|replace|replace_regexp|strip_html|"
-            "find_regexp|regexp_expand|escape_url_query|"
-            "unescape_url_query")
+        from urllib.parse import unquote_plus  # unescape_url_query
+        return unquote_plus(content or "")
 
-    return _doc_kernel(df, one)
+    return _content_stage(df, one)

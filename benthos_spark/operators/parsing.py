@@ -15,6 +15,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from benthos_spark.datamodel import map_messages
+
 # ---------------------------------------------------------------- grok
 
 # The standard public grok base patterns (the subset the reference's
@@ -334,33 +336,51 @@ def jmespath_transform(df: DataFrame, source: Column, expression: str,
 
 # ---------------------------------------------------------------- jsonschema
 
+def jsonschema_first_error(schema: dict):
+    """The one Draft 7 validator behind the `json_schema` processor,
+    condition and Bloblang method: payload text → its first validation
+    error (errors ordered by JSON path), "document is null" for a NULL
+    payload, "invalid JSON: ..." for unparseable text, or None when it
+    validates."""
+    import json
+
+    import jsonschema as _js
+
+    validator = _js.Draft7Validator(schema)
+
+    def first_error(payload):
+        if payload is None:
+            return "document is null"
+        try:
+            doc = json.loads(payload)
+        except ValueError as e:
+            return f"invalid JSON: {e}"
+        errs = sorted(validator.iter_errors(doc), key=lambda e: e.json_path)
+        return errs[0].message if errs else None
+
+    return first_error
+
+
+def jsonschema_error_col(source: Column, schema: dict) -> Column:
+    """`jsonschema_first_error` of each payload in `source`, as a
+    string Column (Arrow-batched; jsonschema is Python-only)."""
+    from pyspark.sql.functions import pandas_udf
+
+    first_error = jsonschema_first_error(schema)
+
+    @pandas_udf("string")
+    def op(payloads):
+        return payloads.map(first_error)
+
+    return op(source)
+
+
 def jsonschema_validate(df: DataFrame, source: Column, schema: dict,
                         error_col: str = "_error") -> DataFrame:
     """`json_schema` processor (lib/processor/jsonschema.go:22):
     validate payloads; failures set the error column (error-column
     protocol, SURVEY §2.2) instead of dropping rows."""
-    import json
-
-    import jsonschema as _js
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    validator = _js.Draft7Validator(schema)
-
-    @pandas_udf("string")
-    def op(payloads):
-        def one(p):
-            if p is None:
-                return "document is null"
-            try:
-                errs = sorted(validator.iter_errors(json.loads(p)),
-                              key=lambda e: e.json_path)
-            except ValueError as e:
-                return f"invalid JSON: {e}"
-            return errs[0].message if errs else None
-        return payloads.map(one)
-
-    err = op(source)
+    err = jsonschema_error_col(source, schema)
     prior = F.col(error_col) if error_col in df.columns \
         else F.lit(None).cast("string")
     return df.withColumn(error_col, F.coalesce(prior, err))
@@ -412,27 +432,30 @@ def _xml_tolerant(p: str) -> str:
     return _XML_UNDEF_ENTITY.sub(r"&amp;\1", p)
 
 
-def xml_text_to_json_col(source: Column) -> Column:
-    """Schemaless XML → mxj-rule JSON text as a Column (the
-    `.parse_xml()` no-schema method form; parse failures → NULL)."""
+def _xml_to_json_text(p: str) -> str:
+    """Schemaless XML text → mxj-rule JSON text; raises
+    ElementTree.ParseError."""
     import json
     import xml.etree.ElementTree as ET
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    root = ET.fromstring(_xml_tolerant(p))
+    return json.dumps({root.tag: _xml_elem_to_obj(root)},
+                      separators=(",", ":"), sort_keys=True,
+                      ensure_ascii=False)
 
-    _ = pd
+
+def xml_text_to_json_col(source: Column) -> Column:
+    """Schemaless XML → mxj-rule JSON text as a Column (the
+    `.parse_xml()` no-schema method form; parse failures → NULL)."""
+    import xml.etree.ElementTree as ET
+
+    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
     def op(payloads):
         def one(p):
-            if p is None:
-                return None
             try:
-                root = ET.fromstring(_xml_tolerant(p))
-                return json.dumps({root.tag: _xml_elem_to_obj(root)},
-                                  separators=(",", ":"), sort_keys=True,
-                                  ensure_ascii=False)
+                return None if p is None else _xml_to_json_text(p)
             except ET.ParseError:
                 return None
         return payloads.map(one)
@@ -440,48 +463,20 @@ def xml_text_to_json_col(source: Column) -> Column:
     return op(source)
 
 
-def xml_to_json(df: DataFrame, source: Column | None = None,
-                alias: str = "content",
-                error_col: str = "_error") -> DataFrame:
+def xml_to_json(df: DataFrame) -> DataFrame:
     """`xml` processor, operator `to_json` (lib/processor/xml.go:113):
-    schemaless XML → JSON text.  (The schema-declared fast path is
+    schemaless XML `content` → JSON text, per message through
+    `datamodel.map_messages`.  (The schema-declared fast path is
     bloblang `.parse_xml(schema)` → native from_xml; this operator is
-    for documents with no declared schema, hence the pandas tier.)
-    Parse failures set the error column; content is left unchanged."""
-    import json
+    for documents with no declared schema.)  Parse failures set
+    `_error`; content is left unchanged."""
     import xml.etree.ElementTree as ET
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    def one(content, meta, error):
+        try:
+            return [(None if content is None
+                     else _xml_to_json_text(content), meta, None)]
+        except ET.ParseError as e:
+            return [(content, meta, f"xml: {e}")]
 
-    src = source if source is not None else F.col(alias)
-    _ = pd  # annotation-free signature (future-annotations gotcha)
-
-    @pandas_udf("struct<content:string,error:string>")
-    def op(payloads):
-        out_c, out_e = [], []
-        for p in payloads:
-            if p is None:
-                out_c.append(None)
-                out_e.append(None)
-                continue
-            try:
-                root = ET.fromstring(_xml_tolerant(p))
-                doc = {root.tag: _xml_elem_to_obj(root)}
-                out_c.append(json.dumps(doc, separators=(",", ":"),
-                                        sort_keys=True,
-                                        ensure_ascii=False))
-                out_e.append(None)
-            except ET.ParseError as e:
-                out_c.append(p if isinstance(p, str) else None)
-                out_e.append(f"xml: {e}")
-        return pd.DataFrame({"content": out_c, "error": out_e})
-
-    res = df.withColumn("__xml", op(src))
-    res = res.withColumn(alias, F.col("__xml.content"))
-    if error_col in df.columns:
-        res = res.withColumn(
-            error_col, F.coalesce(F.col("__xml.error"), F.col(error_col)))
-    else:
-        res = res.withColumn(error_col, F.col("__xml.error"))
-    return res.drop("__xml")
+    return map_messages(df, one)

@@ -635,12 +635,14 @@ def _build_input(spark: SparkSession, conf: dict,
 
 def _bloblang_keep(df: DataFrame) -> tuple[str, ...]:
     """The input columns a `bloblang` processor passes through.  The
-    failed-flag survives a mapping unless the mapping assigns it
-    (lib/processor/bloblang.go: the flag is metadata, mappings rewrite
-    the document), and so does the batch bookkeeping, so downstream
-    try/catch and batch-window reads keep working."""
-    return tuple(c for c in df.columns
+    failed-flag and the `meta` map survive a mapping unless the mapping
+    assigns them (lib/processor/bloblang.go: both are metadata, mappings
+    rewrite the document; `meta` assignments edit the map), and so does
+    the batch bookkeeping, so downstream try/catch and batch-window
+    reads keep working."""
+    return tuple(c for c, t in df.dtypes
                  if c in ("batch_id", "part_index", "_error")
+                 or (c == "meta" and t == "map<string,string>")
                  or c.startswith("__branch_"))
 
 

@@ -249,6 +249,19 @@ def test_number_coercion_and_catch(spark):
     assert sorted(r.n for r in out.collect()) == [-1.0, 5.5]
 
 
+def test_identity_root_keeps_runtime_errors(spark):
+    """`root = this` copies `_error` as a field; a failing method still
+    flags the row, as with explicit field assignments."""
+    df = rows(spark, [(1, "3", None), (2, "zz", None), (3, "zz", "earlier")],
+              "id INT, s STRING, _error STRING")
+    want = {1: (3.0, None), 2: (None, ".number(): expected number value"),
+            3: (None, "earlier")}
+    for src in ("root = this\nroot.n = this.s.number()",
+                "root.id = this.id\nroot.n = this.s.number()"):
+        out = map_text(df, src, keep=("_error",))
+        assert {r.id: (r.n, r._error) for r in out.collect()} == want, src
+
+
 def test_meta_assignment_rides_along(spark):
     df = rows(spark, [(1,)], "id INT")
     out = map_text(df, """

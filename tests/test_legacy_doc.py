@@ -1,6 +1,8 @@
 """Direct tests for the dynamic-document interpreter (bloblang/
-interp.py) and the v3 legacy content-doctrine processors it powers
-(operators/legacy_doc.py: json/text/unarchive-content)."""
+interp.py), the v3 legacy content-doctrine processors it powers
+(operators/legacy_doc.py: json/text/unarchive-content) and the
+per-message kernel every content-doctrine processor runs through
+(datamodel.map_messages)."""
 
 from __future__ import annotations
 
@@ -8,10 +10,11 @@ import pytest
 
 from benthos_spark.bloblang.interp import Interp, compile_template
 from benthos_spark.bloblang.parser import parse_query
+from benthos_spark.datamodel import map_messages
+from benthos_spark.stream import ConfigError, _apply_processor
 
-# Soak/parity tier: excluded from the default fast run the driver's
-# verify budget can finish (pytest.ini); run with -m slow.
-pytestmark = __import__('pytest').mark.slow
+_MESSAGES = ("batch_id BIGINT, part_index INT, content STRING, "
+             "meta MAP<STRING, STRING>, _error STRING")
 
 
 def ev(src, doc=None, meta=None, content=None):
@@ -114,6 +117,74 @@ def test_unarchive_content_json_map_sets_archive_key(spark):
         .orderBy("part_index").collect()
     assert [r.content for r in rows] == ['{"v":1}', '{"v":2}']
     assert [r.meta.get("archive_key") for r in rows] == ["a", "b"]
+
+
+# (processor config, a part it maps, a part it fails on)
+_FAIL_FLAG_CASES = {
+    "json": ({"json": {"operator": "set", "path": "a", "value": 1}},
+             '{"a":0}', "not json"),
+    "grok": ({"grok": {"expressions": ["%{INT:n}"]}}, "12", "abc"),
+    "parse_log": ({"parse_log": {"format": "syslog_rfc5424"}},
+                  "<34>1 2003-10-11T22:14:15.003Z host app - ID47 - msg",
+                  "not a log"),
+    "number": ({"number": {"operator": "add", "value": 1}}, "3", "abc"),
+    "bloblang": ({"bloblang": "root.n = this.s.number()"},
+                 '{"s":"4"}', '{"s":"x"}'),
+    "awk": ({"awk": {"codec": "json", "program": "{ print $0 }"}},
+            '{"a":1}', "not json"),
+    "jq": ({"jq": {"query": ".a + 1"}}, '{"a":1}', '{"a":"x"}'),
+    "xml": ({"xml": {"operator": "to_json"}}, "<a>1</a>", "<a>"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FAIL_FLAG_CASES))
+def test_failed_part_is_flagged_with_or_without_error_column(spark, name):
+    """A failed part keeps its content and carries `_error`, whether or
+    not the input frame had an `_error` column."""
+    conf, good, bad = _FAIL_FLAG_CASES[name]
+    df = spark.createDataFrame([(0, 0, good, {"k": "v"}, None),
+                                (0, 1, bad, {"k": "v"}, None)], _MESSAGES)
+    outs = [[(r.content, r._error) for r in
+             _apply_processor(d, conf).orderBy("part_index").collect()]
+            for d in (df, df.drop("_error"))]
+    assert outs[0] == outs[1]
+    (_, good_err), (bad_content, bad_err) = outs[0]
+    assert good_err is None and bad_err and bad_content == bad
+
+
+def test_map_messages_drops_splits_and_replaces_errors(spark):
+    df = spark.createDataFrame([(0, 0, "a b", {}, None),
+                                (0, 1, "", {}, "old"),
+                                (1, 0, "c", {"k": "v"}, "old")], _MESSAGES)
+
+    def words(content, meta, error):
+        if content == "c":
+            return [(content, {**meta, "seen": "1"}, "new")]
+        return [(w, meta, None) for w in content.split()]
+
+    rows = map_messages(df, words).orderBy("batch_id", "part_index") \
+        .collect()
+    assert [(r.batch_id, r.part_index, r.content, r.meta, r._error)
+            for r in rows] == [(0, 0, "a", {}, None), (0, 1, "b", {}, None),
+                               (1, 0, "c", {"k": "v", "seen": "1"}, "new")]
+    out = map_messages(df.drop("_error", "meta"), words)
+    assert out.columns == ["batch_id", "part_index", "content", "_error"]
+
+    def size(content, meta, error, batch, part_index):
+        return [(f"{part_index}/{len(batch)}", meta, None)]
+
+    rows = map_messages(df, size, whole_batches=True) \
+        .orderBy("batch_id", "part_index").collect()
+    assert [(r.content, r._error) for r in rows] == [
+        ("0/2", None), ("1/2", "old"), ("0/1", "old")]
+
+
+@pytest.mark.parametrize("kind", ["json", "text"])
+def test_unknown_operator_fails_at_build_time(spark, kind):
+    df = spark.createDataFrame([(0, 0, "{}", {}, None)], _MESSAGES)
+    with pytest.raises(ConfigError,
+                       match=f"{kind} processor operator 'bogus'"):
+        _apply_processor(df, {kind: {"operator": "bogus"}})
 
 
 def test_interp_unknown_surface_raises():

@@ -50,7 +50,7 @@ _CASES = {
         {"processors": []}], True),
     "error_flag": ([
         {"check": "this.value > 100", "processors": [{"bloblang": (
-            "root.id = this.id\nroot.k = meta(\"k\")")}]},
+            "root = this\nroot.k = meta(\"k\")")}]},
         {"processors": [_SMALL]}], True),
     "meta_update": ([
         {"check": "this.kind == \"a\"", "processors": [{"bloblang": (
@@ -107,6 +107,29 @@ def test_projection_equals_the_union(spark, name):
     want = _union(df, cases)
     assert _is_union(out) is not fused
     assert _rows(out) == _rows(want)
+
+
+@pytest.mark.parametrize("fused", [True, False])
+def test_meta_assignments_edit_the_meta_map(spark, fused):
+    cases = _CASES["meta_update"][0]
+    df = spark.createDataFrame(_ROWS, _SCHEMA)
+    out = (_apply_processor(df, {"switch": cases}) if fused
+           else _union(df, cases))
+    assert "meta_lane" not in out.columns
+    assert {r.id: r.meta for r in out.collect()} == {
+        1: {"k": "x", "lane": "big"}, 2: {}, 3: {}, 4: {"lane": "big"},
+        5: {}, 6: {}}
+
+
+@pytest.mark.parametrize("fused", [True, False])
+def test_error_flag_of_an_identity_mapping(spark, fused):
+    cases = _CASES["error_flag"][0]
+    df = spark.createDataFrame(_ROWS, _SCHEMA)
+    out = (_apply_processor(df, {"switch": cases}) if fused
+           else _union(df, cases))
+    assert {r.id: r._error for r in out.collect()} == {
+        1: None, 2: "metadata value 'k' not found", 3: "earlier",
+        4: "metadata value 'k' not found", 5: None, 6: None}
 
 
 def test_conditional_is_one_projection(spark):
