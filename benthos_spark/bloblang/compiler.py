@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from benthos_spark.bloblang import ast
 from benthos_spark.bloblang.parser import parse_mapping
-from benthos_spark.datamodel import ERROR_COL, META_COL
+from benthos_spark.datamodel import ERROR_COL, META_COL, flag_error
 from benthos_spark.functions import timestamps as ts_fns
 
 
@@ -2416,20 +2416,20 @@ class MappingExec:
                         F.map_filter(meta_final, key_neq(key)),
                         F.create_map(F.lit(key), val.cast("string")))
         # error-flag protocol: strict-method failure conditions become
-        # per-row _error values (first failure wins, existing flag
-        # preserved) — lib/processor/bloblang.go error semantics.  The
-        # flag ALWAYS propagates when conditions exist (errors must
-        # not vanish), even if the caller didn't ask to keep it.
+        # the row's new error (the first failing statement's, as in
+        # the interpreter), merged by flag_error — lib/processor/
+        # bloblang.go error semantics.  The flag ALWAYS propagates when
+        # conditions exist (errors must not vanish), even if the
+        # caller didn't ask to keep it.
         err_final: Column | None = None
         if scope.error_conds and ERROR_COL in df.columns \
                 and ERROR_COL not in keep_names \
                 and ERROR_COL not in scope.root_fields:
             keep_names.append(ERROR_COL)
         if scope.error_conds and carried(ERROR_COL):
-            err_final = F.col(ERROR_COL)
-            for cond, msgc in scope.error_conds:
-                err_final = F.coalesce(
-                    err_final, F.when(cond, msgc.cast("string")))
+            err_final = flag_error(df, F.coalesce(*[
+                F.when(cond, msgc.cast("string"))
+                for cond, msgc in scope.error_conds]))
         # a carried identity copy takes its update in place
         for name, final in (("meta", meta_final), (ERROR_COL, err_final)):
             if final is not None and name not in keep_names:

@@ -19,12 +19,18 @@ Typed/relational DataFrames (parquet tables) are first-class too — the
 engine's operators work on either shape; the message shape is only
 required by batch-aware operators (batch_index/from_all/archive/...).
 
-Fail-flag protocol of the content-doctrine processors (json, text,
-metadata, number, grok, parse_log, unarchive, interpreted bloblang,
-awk, jq, xml — all run per message through `map_messages`): a part
-that fails keeps its content and carries the error string in `_error`;
-a new error replaces an old one, and `_error` is always present in the
-output, added as NULL when the input frame lacked it.
+Fail-flag rule (FlagErr, lib/processor/util.go, sets the one metadata
+key): a step that fails a part writes its error to `_error`, replacing
+any older one; a part the step passes keeps its old `_error`, and its
+content is kept either way.  `flag_error` is the one place an old and
+a new error meet.  Every writer goes through it: `with_error`, compiled
+Bloblang mappings (within one mapping the first failing statement's
+error is the new one, as in the interpreter), the `json_schema`
+processor, the jq JVM tier, `map_messages` (the content-doctrine
+processors: json, text, metadata, number, grok, parse_log, unarchive,
+interpreted bloblang, awk, jq, xml) and `map_calls` (the per-row client
+processors: http, aws_lambda, redis, mongodb, dynamodb_partiql, sql).
+A writer adds `_error` as NULL to a frame that lacked it.
 """
 
 from __future__ import annotations
@@ -38,6 +44,8 @@ META_COL = "meta"
 CONTENT_COL = "content"
 BATCH_COL = "batch_id"
 PART_INDEX_COL = "part_index"
+# the kernels' output column for each row's new error, before flag_error
+_NEW_ERROR = "__new_error"
 
 MESSAGE_SCHEMA = T.StructType([
     T.StructField(BATCH_COL, T.LongType(), False),
@@ -103,15 +111,29 @@ def meta_set(df: DataFrame, key: str, value: Column) -> DataFrame:
     )
 
 
+def flag_error(df: DataFrame, error: Column) -> Column:
+    """`_error` of ``df``'s rows after a step whose error for a row is
+    ``error`` (NULL where the step passed): the new error replaces the
+    old one, a passing row keeps its old `_error` (FlagErr)."""
+    new = error.cast("string")
+    return F.coalesce(new, F.col(ERROR_COL)) if ERROR_COL in df.columns \
+        else new
+
+
 def with_error(df: DataFrame, cond: Column, message: Column | str) -> DataFrame:
-    """Flag rows failed without dropping them (first error wins, like the
-    reference's FailFlag, lib/processor/util.go)."""
+    """Flag the rows where ``cond`` holds failed, without dropping them;
+    their `message` replaces an older error (`flag_error`)."""
     msg = F.lit(message) if isinstance(message, str) else message
-    return df.withColumn(
-        ERROR_COL,
-        F.when(F.col(ERROR_COL).isNotNull(), F.col(ERROR_COL))
-         .when(cond, msg.cast("string")),
-    )
+    return df.withColumn(ERROR_COL, flag_error(df, F.when(cond, msg)))
+
+
+def row_payload(df: DataFrame, content: str = CONTENT_COL) -> Column:
+    """A row's payload: its ``content`` column, else the row as a JSON
+    object.  `_error` is left out: the flag is metadata, not data."""
+    if content in df.columns:
+        return F.col(content)
+    return F.to_json(F.struct(*[F.col(c) for c in df.columns
+                                if c != ERROR_COL]))
 
 
 def errored() -> Column:
@@ -130,8 +152,8 @@ def map_messages(df: DataFrame, fn, *, whole_batches: bool = False
     outputs' `part_index` becomes 0..n-1).  Each output's error is the
     part's new error, or None to keep the old one.  Every other column
     passes through; `meta` is written back only when the frame has it;
-    `_error` is added when the frame lacks it.  The kernel catches
-    nothing: a caller turns its own failures into error strings.
+    the error goes through `flag_error`.  The kernel catches nothing: a
+    caller turns its own failures into error strings.
 
     With ``whole_batches`` the parts of one `batch_id` are processed
     together, in `part_index` order, and ``fn`` also gets ``batch`` (a
@@ -140,8 +162,7 @@ def map_messages(df: DataFrame, fn, *, whole_batches: bool = False
     has_meta = META_COL in df.columns
     has_err = ERROR_COL in df.columns
     has_index = PART_INDEX_COL in df.columns
-    schema = df.schema if has_err else T.StructType(
-        df.schema.fields + [T.StructField(ERROR_COL, T.StringType())])
+    schema = _with_new_error(df.schema.fields)
 
     def run(pdf):
         n = len(pdf)
@@ -164,13 +185,13 @@ def map_messages(df: DataFrame, fn, *, whole_batches: bool = False
                 take.append(i)
                 out_c.append(c2)
                 out_m.append(m2)
-                out_e.append(e if e2 is None else e2)
+                out_e.append(e2)
                 out_i.append(j if len(outs) > 1 else None)
         out = pdf.take(take) if reshaped else pdf
         if not take:  # assigning [] would retype the map columns
-            return out if has_err else out.assign(**{ERROR_COL: None})
+            return out.assign(**{_NEW_ERROR: None})
         out[CONTENT_COL] = out_c
-        out[ERROR_COL] = out_e
+        out[_NEW_ERROR] = out_e
         if has_meta:
             out[META_COL] = out_m
         if split and has_index:
@@ -182,10 +203,72 @@ def map_messages(df: DataFrame, fn, *, whole_batches: bool = False
         def grouped(pdf):
             return run(pdf.sort_values(PART_INDEX_COL, kind="stable")
                        if has_index else pdf)
-        return df.groupBy(BATCH_COL).applyInPandas(grouped, schema=schema)
+        return _flag_new_errors(
+            df.groupBy(BATCH_COL).applyInPandas(grouped, schema=schema))
 
     def batches(pdfs):
         for pdf in pdfs:
             yield run(pdf)
 
-    return df.mapInPandas(batches, schema=schema)
+    return _flag_new_errors(df.mapInPandas(batches, schema=schema))
+
+
+def map_calls(df: DataFrame, args: list[Column], call, *, client,
+              alias: str | None, error) -> DataFrame:
+    """Run ``call(c, *values)`` exactly once per row of ``df``,
+    Arrow-batched: ``c`` is the partition's client and ``values`` are
+    the row's ``args`` (a NULL arrives as None).
+
+    ``client()`` makes one client per partition; a client that is a
+    context manager is entered around the partition, so it can commit
+    and close at partition end.  ``call`` returns the row's result,
+    written as a string to the ``alias`` column (none when ``alias`` is
+    None), or raises: ``error(exc)`` is then the row's new error
+    (`flag_error`), and the row keeps the ``alias`` value it had.
+    Every other column passes through."""
+    from contextlib import nullcontext
+
+    if alias is not None and alias in df.columns:
+        df = df.withColumn(alias, F.col(alias).cast("string"))
+    fields = list(df.schema.fields)
+    if alias is not None and alias not in df.columns:
+        fields.append(T.StructField(alias, T.StringType()))
+    names = [f"__arg{i}" for i in range(len(args))]
+    work = df.select("*", *[c.alias(n) for c, n in zip(args, names)])
+
+    def run(pdfs):
+        c = client()
+        with c if hasattr(c, "__enter__") else nullcontext(c) as cl:
+            for pdf in pdfs:
+                n = len(pdf)
+                values = [[None if isinstance(v, float) and v != v else v
+                           for v in pdf[a].tolist()] for a in names]
+                results = (pdf[alias].tolist() if alias in pdf.columns
+                           else [None] * n)
+                errors = [None] * n
+                for i, row in enumerate(zip(*values) if names
+                                        else [()] * n):
+                    try:
+                        res = call(cl, *row)
+                    except Exception as exc:  # the row's fail flag
+                        errors[i] = error(exc)
+                        continue
+                    results[i] = None if res is None else str(res)
+                out = pdf.drop(columns=names)
+                if alias is not None:
+                    out[alias] = results
+                out[_NEW_ERROR] = errors
+                yield out
+
+    return _flag_new_errors(
+        work.mapInPandas(run, schema=_with_new_error(fields)))
+
+
+def _with_new_error(fields: list) -> T.StructType:
+    return T.StructType(
+        fields + [T.StructField(_NEW_ERROR, T.StringType())])
+
+
+def _flag_new_errors(df: DataFrame) -> DataFrame:
+    return df.withColumn(ERROR_COL, flag_error(df, F.col(_NEW_ERROR))) \
+        .drop(_NEW_ERROR)

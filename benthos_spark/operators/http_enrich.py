@@ -9,83 +9,51 @@ Two mappings, fastest first (SURVEY §2.2 enrichment table):
    serves a keyed dataset, fetch it ONCE into a dimension table and
    broadcast-join.  No per-record round trips; always prefer this at
    scale.
-2. **`http_enrich` below**: genuinely dynamic per-record calls via
-   mapInPandas — each partition runs a pooled client, so concurrency =
-   partitions × pool, with bounded in-flight requests per executor
-   (the reference's parallel/max_in_flight).  Failures set `_error`
-   (error-column protocol) instead of dropping rows; retries with
-   exponential backoff mirror lib/util/retries defaults.
+2. **`http_enrich` below**: genuinely dynamic per-record calls through
+   `datamodel.map_calls`, exactly one request per row.  Retries with
+   exponential backoff mirror lib/util/retries defaults; a request
+   that still fails flags the row (`datamodel.flag_error`: the new
+   error replaces an older one) and keeps its rows and columns.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from benthos_spark.datamodel import map_calls, row_payload
 
 
 def http_enrich(df: DataFrame, url_col: Column, alias: str = "response",
                 method: str = "GET", body_col: Column | None = None,
                 headers: dict[str, str] | None = None,
-                timeout_s: float = 10.0, retries: int = 2,
-                pool_size: int = 8) -> DataFrame:
-    """Call `url` per row; append `alias` (response body string) and
-    `_error` columns.  urllib-based (stdlib) — swap the session factory
-    for aiohttp on clusters that have it; the batch shape is identical.
-    """
-    in_cols = df.columns
-    df = df.withColumn("__url", url_col)
-    if body_col is not None:
-        df = df.withColumn("__body", body_col)
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        if not f.name.startswith("__"))
-    schema += f", `{alias}` string"
-    if "_error" not in in_cols:
-        schema += ", `_error` string"
+                timeout_s: float = 10.0, retries: int = 2) -> DataFrame:
+    """Call `url` per row; the response body lands in `alias`, a failed
+    request flags `_error`.  urllib-based (stdlib)."""
     hdrs = dict(headers or {})
 
-    def run(batches: Iterator) -> Iterator:
+    def call(_client, url: str, body: str | None = None) -> str:
         import time
         import urllib.error
         import urllib.request
 
-        def call(url: str, body: str | None) -> tuple[str | None, str | None]:
-            data = body.encode() if body is not None else None
-            last_err = None
-            for attempt in range(retries + 1):
-                try:
-                    req = urllib.request.Request(url, data=data,
-                                                 headers=hdrs, method=method)
-                    with urllib.request.urlopen(req, timeout=timeout_s) as r:
-                        return r.read().decode(), None
-                except (urllib.error.URLError, OSError, ValueError) as e:
-                    last_err = str(e)
-                    if attempt < retries:
-                        time.sleep(0.1 * (2 ** attempt))  # backoff
-            return None, f"http request failed: {last_err}"
+        data = body.encode() if body is not None else None
+        for attempt in range(retries + 1):
+            try:
+                req = urllib.request.Request(url, data=data,
+                                             headers=hdrs, method=method)
+                with urllib.request.urlopen(req, timeout=timeout_s) as r:
+                    return r.read().decode()
+            except (urllib.error.URLError, OSError, ValueError):
+                if attempt == retries:
+                    raise
+                time.sleep(0.1 * (2 ** attempt))  # backoff
 
-        for pdf in batches:
-            out_resp, out_err = [], []
-            bodies = pdf["__body"] if "__body" in pdf.columns else None
-            for i, url in enumerate(pdf["__url"]):
-                body = bodies.iloc[i] if bodies is not None else None
-                resp, err = call(url, body)
-                out_resp.append(resp)
-                out_err.append(err)
-            res = pdf.drop(columns=[c for c in ("__url", "__body")
-                                    if c in pdf.columns])
-            res[alias] = out_resp
-            if "_error" in res.columns:
-                res["_error"] = res["_error"].combine_first(
-                    __import__("pandas").Series(out_err))
-            else:
-                res["_error"] = out_err
-            yield res
-
-    return df.mapInPandas(run, schema=schema)
+    args = [url_col] if body_col is None else [url_col, body_col]
+    return map_calls(df, args, call, client=lambda: None, alias=alias,
+                     error=lambda e: f"http request failed: {e}")
 
 
 def http_enrich_json(df: DataFrame, url_col: Column, schema: str,
@@ -109,36 +77,29 @@ def fetch_dimension(spark, url: str, schema: str,
     return values_or_pickled(spark, rows, schema)
 
 
+class _FunctionError(Exception):
+    """The function ran and reported a failure (status code, body)."""
+
+
 def lambda_map(df: DataFrame, function_name: str,
                payload_col: Column | None = None,
                alias: str = "lambda_response",
-               client_factory=None,
-               parallel: int = 1) -> DataFrame:
+               client_factory=None) -> DataFrame:
     """aws_lambda processor (lib/processor/aws_lambda.go): invoke a
-    Lambda per record, response body replaces/joins the part.  Same
-    mapInPandas shape as http_enrich: one client per partition,
-    Arrow-batched rows, per-row `_error` on invocation failure (the
-    reference's error-flag semantics).
+    Lambda per record (`datamodel.map_calls`: one client per
+    partition); the response body lands in `alias`, an invocation or
+    function failure flags `_error` (the reference's error-flag
+    semantics).  The payload defaults to the row's
+    `datamodel.row_payload`.
 
     `client_factory` returns an object with
     `invoke(FunctionName=..., Payload=bytes) -> {"Payload": reader,
     "StatusCode": int}` (the boto3 lambda client contract).  The
     default factory imports boto3 — gated with an actionable error in
-    environments without it (this container); tests inject a fake.
+    environments without it; tests inject a fake.
     At 100 TB the same caveat as the reference docs: a per-record
     remote call is the bottleneck by construction — prefer batching
     inside the payload or precomputing a dimension."""
-    in_cols = df.columns
-    body = payload_col if payload_col is not None else (
-        F.col("content") if "content" in in_cols
-        else F.to_json(F.struct(*[F.col(c) for c in in_cols
-                                  if c != "_error"])))
-    df2 = df.withColumn("__payload", body)
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", `{alias}` string"
-    if "_error" not in in_cols:
-        schema += ", `_error` string"
 
     def default_factory():
         try:
@@ -151,37 +112,24 @@ def lambda_map(df: DataFrame, function_name: str,
                 "credentials") from exc
         return boto3.client("lambda")
 
-    factory = client_factory or default_factory
+    def call(client, body: str | None) -> str:
+        resp = client.invoke(FunctionName=function_name,
+                             Payload=(body or "").encode())
+        raw = resp["Payload"].read()
+        text = raw.decode() if isinstance(raw, (bytes, bytearray)) \
+            else str(raw)
+        code = int(resp.get("StatusCode", 200))
+        if code >= 300 or resp.get("FunctionError"):
+            raise _FunctionError(code, text)
+        return text
 
-    def run(batches):
-        import pandas as pd
-        client = factory()
-        for pdf in batches:
-            outs, errs = [], []
-            for payload in pdf["__payload"]:
-                try:
-                    resp = client.invoke(
-                        FunctionName=function_name,
-                        Payload=(payload or "").encode())
-                    raw = resp["Payload"].read()
-                    body = raw.decode() if isinstance(
-                        raw, (bytes, bytearray)) else str(raw)
-                    code = int(resp.get("StatusCode", 200))
-                    if code >= 300 or resp.get("FunctionError"):
-                        outs.append(None)
-                        errs.append(f"lambda error {code}: {body[:200]}")
-                    else:
-                        outs.append(body)
-                        errs.append(None)
-                except Exception as e:  # client/network failure
-                    outs.append(None)
-                    errs.append(f"lambda invoke failed: {str(e)[:200]}")
-            res = pdf.drop(columns=["__payload"])
-            res[alias] = outs
-            if "_error" in res.columns:
-                res["_error"] = res["_error"].combine_first(pd.Series(errs))
-            else:
-                res["_error"] = errs
-            yield res
+    def error(exc: Exception) -> str:
+        if isinstance(exc, _FunctionError):
+            code, text = exc.args
+            return f"lambda error {code}: {text[:200]}"
+        return f"lambda invoke failed: {str(exc)[:200]}"
 
-    return df2.mapInPandas(run, schema=schema)
+    return map_calls(
+        df, [payload_col if payload_col is not None else row_payload(df)],
+        call, client=client_factory or default_factory, alias=alias,
+        error=error)

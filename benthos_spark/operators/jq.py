@@ -63,7 +63,8 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from benthos_spark.datamodel import CONTENT_COL, ERROR_COL, map_messages
+from benthos_spark.datamodel import (CONTENT_COL, ERROR_COL, flag_error,
+                                     map_messages)
 
 __all__ = ["JQCompileError", "JQError", "parse_jq", "jq_eval_text",
            "jq_static_path", "jq_transform"]
@@ -1915,19 +1916,13 @@ def jq_transform(df: DataFrame, query: str,
         out = F.coalesce(
             F.to_json(F.try_variant_get(v, prefix, "variant")),
             F.lit("null"))
-        # both columns must evaluate against the ORIGINAL content —
-        # chained withColumn would re-resolve `err` on the rewritten one
-        res = df.withColumns({
-            "__jq_out": F.when(err, F.col(CONTENT_COL)).otherwise(out),
-            "__jq_err": F.when(err, F.lit(
-                f"jq: cannot index value in path {prefix}"))})
-        res = res.withColumn(CONTENT_COL, F.col("__jq_out"))
-        if ERROR_COL in df.columns:
-            res = res.withColumn(ERROR_COL, F.coalesce(
-                F.col("__jq_err"), F.col(ERROR_COL)))
-        else:
-            res = res.withColumn(ERROR_COL, F.col("__jq_err"))
-        return res.drop("__jq_out", "__jq_err")
+        # one projection: both columns evaluate against the ORIGINAL
+        # content (chained withColumn would re-resolve `err` on the
+        # rewritten one)
+        return df.withColumns({
+            CONTENT_COL: F.when(err, F.col(CONTENT_COL)).otherwise(out),
+            ERROR_COL: flag_error(df, F.when(err, F.lit(
+                f"jq: cannot index value in path {prefix}")))})
 
     def one(content, meta, error):
         try:

@@ -10,10 +10,10 @@ Spark shape — same doctrine as http_enrich / lambda_map: everything
 that CAN run JVM-side does (the interpolated key and the Bloblang
 filter/document maps compile to Columns and are evaluated inside
 whole-stage codegen BEFORE the client stage); only the client call
-itself runs in an Arrow-batched mapInPandas with ONE client per
-partition.  Results land in an alias column and failures set the
-per-row `_error` column (the reference's error-flag semantics) —
-columnar adaptation of "result replaces part contents".
+itself runs per row, through `datamodel.map_calls` (Arrow-batched, ONE
+client per partition).  Results land in an alias column; a failed call
+flags the row's `_error` (`datamodel.flag_error`: the new error replaces
+an older one) — columnar adaptation of "result replaces part contents".
 
 At 100 TB the same caveat as the reference docs: a per-record remote
 round-trip is the bottleneck by construction.  Prefer cache_lookup_join
@@ -34,6 +34,8 @@ import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from benthos_spark.datamodel import CONTENT_COL, map_calls
 
 REDIS_OPERATORS = ("scard", "sadd", "incrby")
 
@@ -78,15 +80,6 @@ def _default_mongo_factory(url: str):
     return factory
 
 
-def _out_schema(df: DataFrame, alias: str) -> str:
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", `{alias}` string"
-    if "_error" not in df.columns:
-        schema += ", `_error` string"
-    return schema
-
-
 def redis_map(df: DataFrame, operator: str, key_col: Column,
               value_col: Column | None = None,
               alias: str = "redis_result",
@@ -101,43 +94,20 @@ def redis_map(df: DataFrame, operator: str, key_col: Column,
         raise ValueError(
             f"operator not recognised: {operator!r} (redis.go:280 — "
             f"must be one of {REDIS_OPERATORS})")
-    in_cols = df.columns
     if value_col is None:
-        value_col = (F.col("content") if "content" in in_cols
-                     else F.lit(None).cast("string"))
-    work = (df.withColumn("__kv_key", key_col.cast("string"))
-              .withColumn("__kv_val", value_col.cast("string")))
-    schema = _out_schema(df, alias)
-    factory = client_factory or _default_redis_factory(url)
+        value_col = (F.col(CONTENT_COL) if CONTENT_COL in df.columns
+                     else F.lit(None))
 
-    def run(batches):
-        client = factory()
-        for pdf in batches:
-            outs, errs = [], []
-            for key, val in zip(pdf["__kv_key"], pdf["__kv_val"]):
-                try:
-                    if operator == "scard":
-                        res = client.scard(key)
-                    elif operator == "sadd":
-                        res = client.sadd(key, val if val is not None else "")
-                    else:  # incrby
-                        res = client.incrby(key, int(val))
-                    outs.append(str(int(res)))
-                    errs.append(None)
-                except Exception as exc:  # client errors → _error flag
-                    outs.append(None)
-                    errs.append(f"redis {operator}: {exc}")
-            out = pdf.drop(columns=["__kv_key", "__kv_val"])
-            out[alias] = outs
-            if "_error" in in_cols:
-                out["_error"] = [
-                    e if e is not None else prev
-                    for e, prev in zip(errs, out["_error"])]
-            else:
-                out["_error"] = errs
-            yield out
+    def call(client, key, val):
+        if operator == "scard":
+            return int(client.scard(key))
+        if operator == "sadd":
+            return int(client.sadd(key, val if val is not None else ""))
+        return int(client.incrby(key, int(val)))
 
-    return work.mapInPandas(run, schema=schema)
+    return map_calls(df, [key_col.cast("string"), value_col.cast("string")],
+                     call, client=client_factory or _default_redis_factory(url),
+                     alias=alias, error=lambda e: f"redis {operator}: {e}")
 
 
 def mongodb_map(df: DataFrame, operation: str, database: str,
@@ -164,76 +134,39 @@ def mongodb_map(df: DataFrame, operation: str, database: str,
         raise ValueError(f"mongodb {operation}: document_map required")
     if needs_filter and filter_col is None:
         raise ValueError(f"mongodb {operation}: filter_map required")
-    in_cols = df.columns
-    work = df.withColumn(
-        "__kv_filter",
-        (filter_col if filter_col is not None
-         else F.lit(None)).cast("string"))
-    work = work.withColumn(
-        "__kv_doc",
-        (document_col if document_col is not None
-         else F.lit(None)).cast("string"))
-    schema = _out_schema(df, alias)
     factory = client_factory or _default_mongo_factory(url)
 
-    def run(batches):
-        client = factory()
+    def call(client, flt, doc):
         coll = client[database][collection]
-        for pdf in batches:
-            outs, errs = [], []
-            for flt, doc in zip(pdf["__kv_filter"], pdf["__kv_doc"]):
-                try:
-                    fobj = json.loads(flt) if flt else None
-                    dobj = json.loads(doc) if doc else None
-                    if operation == "insert-one":
-                        r = coll.insert_one(dobj)
-                        outs.append(json.dumps(
-                            {"inserted_id": str(r.inserted_id)}))
-                    elif operation == "delete-one":
-                        r = coll.delete_one(fobj)
-                        outs.append(json.dumps(
-                            {"deleted": int(r.deleted_count)}))
-                    elif operation == "delete-many":
-                        r = coll.delete_many(fobj)
-                        outs.append(json.dumps(
-                            {"deleted": int(r.deleted_count)}))
-                    elif operation == "replace-one":
-                        r = coll.replace_one(fobj, dobj, upsert=upsert)
-                        outs.append(json.dumps(
-                            {"matched": int(r.matched_count),
-                             "modified": int(r.modified_count)}))
-                    elif operation == "update-one":
-                        r = coll.update_one(fobj, {"$set": dobj}
-                                            if not any(
-                                                k.startswith("$")
-                                                for k in dobj) else dobj,
-                                            upsert=upsert)
-                        outs.append(json.dumps(
-                            {"matched": int(r.matched_count),
-                             "modified": int(r.modified_count)}))
-                    else:  # find-one
-                        found = coll.find_one(fobj)
-                        if found is None:
-                            outs.append(None)
-                            errs.append("mongodb find-one: no documents")
-                            continue
-                        outs.append(json.dumps(found, default=str,
-                                               sort_keys=True))
-                    errs.append(None)
-                except Exception as exc:
-                    outs.append(None)
-                    errs.append(f"mongodb {operation}: {exc}")
-            out = pdf.drop(columns=["__kv_filter", "__kv_doc"])
-            out[alias] = outs
-            if "_error" in in_cols:
-                out["_error"] = [
-                    e if e is not None else prev
-                    for e, prev in zip(errs, out["_error"])]
+        fobj = json.loads(flt) if flt else None
+        dobj = json.loads(doc) if doc else None
+        if operation == "insert-one":
+            return json.dumps({"inserted_id": str(
+                coll.insert_one(dobj).inserted_id)})
+        if operation in ("delete-one", "delete-many"):
+            r = (coll.delete_one if operation == "delete-one"
+                 else coll.delete_many)(fobj)
+            return json.dumps({"deleted": int(r.deleted_count)})
+        if operation in ("replace-one", "update-one"):
+            if operation == "replace-one":
+                r = coll.replace_one(fobj, dobj, upsert=upsert)
             else:
-                out["_error"] = errs
-            yield out
+                r = coll.update_one(
+                    fobj, dobj if any(k.startswith("$") for k in dobj)
+                    else {"$set": dobj}, upsert=upsert)
+            return json.dumps({"matched": int(r.matched_count),
+                               "modified": int(r.modified_count)})
+        found = coll.find_one(fobj)  # find-one
+        if found is None:
+            raise LookupError("no documents")
+        return json.dumps(found, default=str, sort_keys=True)
 
-    return work.mapInPandas(run, schema=schema)
+    def arg(col):
+        return (col if col is not None else F.lit(None)).cast("string")
+
+    return map_calls(df, [arg(filter_col), arg(document_col)], call,
+                     client=factory, alias=alias,
+                     error=lambda e: f"mongodb {operation}: {e}")
 
 
 def dynamodb_partiql_map(df: DataFrame, query: str,
@@ -252,7 +185,6 @@ def dynamodb_partiql_map(df: DataFrame, query: str,
     Client contract: boto3 dynamodb `execute_statement(Statement=...,
     Parameters=[...]) -> {"Items": [...]}`; the default factory
     imports boto3 (gated), tests inject fakes."""
-    in_cols = df.columns
     if args_cols:
         # ignoreNullFields=false: a null arg must survive as an
         # explicit null, or every later positional PartiQL parameter
@@ -263,8 +195,6 @@ def dynamodb_partiql_map(df: DataFrame, query: str,
             {"ignoreNullFields": "false"})
     else:
         packed = F.lit(None).cast("string")
-    work = df.withColumn("__pq_args", packed)
-    schema = _out_schema(df, alias)
 
     def default_factory():
         try:
@@ -277,32 +207,14 @@ def dynamodb_partiql_map(df: DataFrame, query: str,
         return boto3.client("dynamodb",
                             **({"region_name": region} if region else {}))
 
-    factory = client_factory or default_factory
+    def call(client, args_json):
+        kwargs = {"Statement": query}
+        if args_json:
+            kwargs["Parameters"] = list(json.loads(args_json).values())
+        resp = client.execute_statement(**kwargs)
+        return json.dumps(resp.get("Items", []), default=str,
+                          sort_keys=True)
 
-    def run(batches):
-        client = factory()
-        for pdf in batches:
-            outs, errs = [], []
-            for args_json in pdf["__pq_args"]:
-                try:
-                    kwargs = {"Statement": query}
-                    if args_json:
-                        kwargs["Parameters"] = list(
-                            json.loads(args_json).values())
-                    resp = client.execute_statement(**kwargs)
-                    outs.append(json.dumps(resp.get("Items", []),
-                                           default=str, sort_keys=True))
-                    errs.append(None)
-                except Exception as exc:
-                    outs.append(None)
-                    errs.append(f"dynamodb_partiql: {exc}")
-            out = pdf.drop(columns=["__pq_args"])
-            out[alias] = outs
-            if "_error" in in_cols:
-                out["_error"] = [e if e is not None else prev
-                                 for e, prev in zip(errs, out["_error"])]
-            else:
-                out["_error"] = errs
-            yield out
-
-    return work.mapInPandas(run, schema=schema)
+    return map_calls(df, [packed], call,
+                     client=client_factory or default_factory, alias=alias,
+                     error=lambda e: f"dynamodb_partiql: {e}")

@@ -593,10 +593,15 @@ def text_stage(df: DataFrame, spec: dict) -> DataFrame:
         if op == "quote":
             return _json.dumps(content or "")
         if op == "unquote":
+            # strconv.Unquote: anything but a quoted string is an error
+            # that flags the part
             try:
-                return _json.loads(content)
+                res = _json.loads(content or "")
             except ValueError:
-                return content
+                res = None
+            if not isinstance(res, str):
+                raise _OpError("invalid syntax")
+            return res
         if op == "replace":
             return (content or "").replace(
                 str(spec.get("arg", "")), val())

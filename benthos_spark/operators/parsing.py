@@ -15,7 +15,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from benthos_spark.datamodel import map_messages
+from benthos_spark.datamodel import ERROR_COL, flag_error, map_messages
 
 # ---------------------------------------------------------------- grok
 
@@ -375,15 +375,13 @@ def jsonschema_error_col(source: Column, schema: dict) -> Column:
     return op(source)
 
 
-def jsonschema_validate(df: DataFrame, source: Column, schema: dict,
-                        error_col: str = "_error") -> DataFrame:
+def jsonschema_validate(df: DataFrame, source: Column,
+                        schema: dict) -> DataFrame:
     """`json_schema` processor (lib/processor/jsonschema.go:22):
-    validate payloads; failures set the error column (error-column
-    protocol, SURVEY §2.2) instead of dropping rows."""
-    err = jsonschema_error_col(source, schema)
-    prior = F.col(error_col) if error_col in df.columns \
-        else F.lit(None).cast("string")
-    return df.withColumn(error_col, F.coalesce(prior, err))
+    validate payloads; a failure flags the row's `_error`
+    (`datamodel.flag_error`) instead of dropping it."""
+    return df.withColumn(
+        ERROR_COL, flag_error(df, jsonschema_error_col(source, schema)))
 
 
 # ---------------------------------------------------------------- xml

@@ -9,9 +9,12 @@ Spark-first guidance, in order of preference:
    Per-row queries against a database from 1000 executors is a DDoS.
 2. Bulk writes → `df.write.jdbc` / foreachBatch MERGE.
 3. Genuinely per-row statements (the reference's semantics, kept
-   here) → this operator: mapInPandas, ONE connection per partition,
-   one transaction per partition (commit at partition end — the same
-   at-least-once-on-retry contract as the reference's transactions).
+   here) → this operator: `datamodel.map_calls`, exactly one execution
+   per row, ONE connection and one transaction per partition (commit
+   at partition end — the same at-least-once-on-retry contract as the
+   reference's transactions).  A failed statement flags the row's
+   `_error` (`datamodel.flag_error`: the new error replaces an older
+   one) and leaves its `alias` column as it was.
 
 The in-container driver is stdlib `sqlite3` (file DSN); the query uses
 the REFERENCE dialect's placeholder style (lib/processor/sql.go:148-156:
@@ -28,11 +31,14 @@ client will see.
 
 from __future__ import annotations
 
+import json
 import re
-from typing import Callable, Iterator
+from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+
+from benthos_spark.datamodel import map_calls
 
 # Reference dialect → the placeholder style its queries are written in
 # (lib/processor/sql.go:148-156: mysql/clickhouse use ?, postgres $N,
@@ -68,8 +74,6 @@ def register_driver(name: str, connect: Callable[[str], object],
 
 
 def _connect(driver: str, dsn: str):
-    if driver in _DRIVER_FACTORIES:
-        return _DRIVER_FACTORIES[driver](dsn)
     if driver == "sqlite":
         import sqlite3
         con = sqlite3.connect(dsn, timeout=60.0)
@@ -156,6 +160,17 @@ def prepare_query(query: str, driver: str) -> tuple[str, list[int]]:
     return "".join(out), order
 
 
+@contextmanager
+def _transaction(connect, driver: str, dsn: str):
+    """A partition's cursor: one connection, committed at the end."""
+    con = connect(dsn) if connect is not None else _connect(driver, dsn)
+    try:
+        yield con.cursor()
+        con.commit()
+    finally:
+        con.close()
+
+
 def sql_query(df: DataFrame, dsn: str, query: str,
               args_cols: list[Column] | None = None,
               result_codec: str = "json_array",
@@ -167,75 +182,20 @@ def sql_query(df: DataFrame, dsn: str, query: str,
     Failures set `_error` and never abort the partition."""
     if result_codec not in ("none", "json_array"):
         raise ValueError(f"result_codec {result_codec!r}: none|json_array")
-    in_cols = df.columns
-    work = df
-    arg_names = []
-    for i, c in enumerate(args_cols or []):
-        arg_names.append(f"__arg{i}")
-        work = work.withColumn(f"__arg{i}", c)
-
-    fields = [f for f in work.schema.fields if not f.name.startswith("__")]
-    out_names = [f.name for f in fields]
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in fields)
-    if result_codec == "json_array" and alias not in out_names:
-        schema += f", `{alias}` string"
-    if "_error" not in in_cols:
-        schema += ", `_error` string"
-
     client_query, arg_order = prepare_query(query, driver)
     # resolve a registered factory NOW (driver side): the closure ships
     # it to the Python workers, where the module registry is fresh
-    factory = _DRIVER_FACTORIES.get(driver)
+    connect = _DRIVER_FACTORIES.get(driver)
 
-    def run(batches: Iterator) -> Iterator:
-        import json
+    def call(cur, *vals):
+        cur.execute(client_query, vals if arg_order is None
+                    else tuple(vals[j] for j in arg_order))
+        if result_codec == "json_array":
+            cols = [d[0] for d in cur.description or []]
+            rows = cur.fetchall() if cols else []
+            return json.dumps([dict(zip(cols, r)) for r in rows])
 
-        import pandas as pd
-
-        con = factory(dsn) if factory is not None else _connect(driver, dsn)
-        try:
-            cur = con.cursor()
-            for pdf in batches:
-                results, errs = [], []
-                def native(v):
-                    # numpy scalars bind as BLOBs in sqlite3 (silent
-                    # non-match); NaN/NaT mean SQL NULL
-                    if v is None or (isinstance(v, float) and v != v):
-                        return None
-                    if type(v).__module__ == "numpy":
-                        return v.item()
-                    return v
-
-                for i in range(len(pdf)):
-                    vals = [native(pdf[a].iloc[i]) for a in arg_names]
-                    try:
-                        args = (tuple(vals) if arg_order is None
-                                else tuple(vals[j] for j in arg_order))
-                        cur.execute(client_query, args)
-                        if result_codec == "json_array":
-                            cols = [d[0] for d in cur.description or []]
-                            rows = cur.fetchall() if cols else []
-                            results.append(json.dumps(
-                                [dict(zip(cols, r)) for r in rows]))
-                        else:
-                            results.append(None)
-                        errs.append(None)
-                    except Exception as e:  # per-row error protocol
-                        results.append(None)
-                        errs.append(f"sql: {e}")
-                res = pdf.drop(columns=[c for c in pdf.columns
-                                        if c.startswith("__")])
-                if result_codec == "json_array":
-                    res[alias] = results
-                if "_error" in res.columns:
-                    res["_error"] = res["_error"].combine_first(
-                        pd.Series(errs, index=res.index))
-                else:
-                    res["_error"] = errs
-                yield res
-            con.commit()  # one transaction per partition
-        finally:
-            con.close()
-
-    return work.mapInPandas(run, schema=schema)
+    return map_calls(df, list(args_cols or []), call,
+                     client=lambda: _transaction(connect, driver, dsn),
+                     alias=alias if result_codec == "json_array" else None,
+                     error=lambda e: f"sql: {e}")

@@ -76,13 +76,12 @@ def partition_routes(df: DataFrame, n: int, route_on: Column) -> list[DataFrame]
     return [df.filter(h == i) for i in range(n)]
 
 
-def with_dead_letter(df: DataFrame, dlq_sink: Sink,
-                     error_col: str = ERROR_COL) -> DataFrame:
-    """`drop_on_error`/`reject`/DLQ pattern: failed rows (error column
-    set) go to the dead-letter sink; clean rows flow onward.  A frame
-    with no error column has nothing to route — every row is clean."""
-    if error_col not in df.columns:
+def with_dead_letter(df: DataFrame, dlq_sink: Sink) -> DataFrame:
+    """`drop_on_error`/`reject`/DLQ pattern: failed rows (`_error` set)
+    go to the dead-letter sink; clean rows flow onward.  A frame with
+    no `_error` column has nothing to route — every row is clean."""
+    if ERROR_COL not in df.columns:
         return df
     df = df.persist()
-    dlq_sink(df.filter(F.col(error_col).isNotNull()))
-    return df.filter(F.col(error_col).isNull())
+    dlq_sink(df.filter(F.col(ERROR_COL).isNotNull()))
+    return df.filter(F.col(ERROR_COL).isNull())

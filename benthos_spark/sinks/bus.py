@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from benthos_spark.datamodel import row_payload
+
 # family → (client pip package, the reference output file)
 BUS_FAMILIES = {
     "nats": ("nats-py", "lib/output/nats.go"),
@@ -80,8 +82,7 @@ def publish_output(df: DataFrame, kind: str, target,
     factory = client_factory
     if isinstance(target, str):
         target = F.lit(target)
-    body = (F.col(content_col) if content_col in df.columns
-            else F.to_json(F.struct(*df.columns)))
+    body = row_payload(df, content_col)
     work = df.select(target.cast("string").alias("__target"),
                      body.cast("string").alias("__payload"))
 
@@ -173,8 +174,7 @@ def doc_store_output(df: DataFrame, kind: str, target,
         target = F.lit(target)
     if isinstance(key, str):
         key = F.col(key)
-    body = (F.col(content_col) if content_col in df.columns
-            else F.to_json(F.struct(*df.columns)))
+    body = row_payload(df, content_col)
     work = df.select(target.cast("string").alias("__target"),
                      key.cast("string").alias("__key"),
                      body.cast("string").alias("__doc"))

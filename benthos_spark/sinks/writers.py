@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from benthos_spark.datamodel import row_payload
+
 
 def write_file(df: DataFrame, path: str, fmt: str = "parquet",
                mode: str = "overwrite",
@@ -36,8 +38,7 @@ def write_files(df: DataFrame, path) -> None:
     if isinstance(path, str):
         path = F.lit(path)
     assert isinstance(path, Column)
-    body = (F.col("content") if "content" in df.columns
-            else F.to_json(F.struct(*df.columns)))
+    body = row_payload(df)
     work = df.select(path.cast("string").alias("__path"),
                      body.cast("string").alias("__payload"))
 

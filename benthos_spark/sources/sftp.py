@@ -29,6 +29,8 @@ import posixpath
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from benthos_spark.datamodel import row_payload
+
 
 def _default_factory(spec: dict):
     def factory():
@@ -113,8 +115,7 @@ def write_sftp(df: DataFrame, path, codec: str = "all-bytes",
     if isinstance(path, str):
         path = F.lit(path)
     assert isinstance(path, Column)
-    body = (F.col("content") if "content" in df.columns
-            else F.to_json(F.struct(*df.columns)))
+    body = row_payload(df)
     work = df.select(path.cast("string").alias("__path"),
                      body.cast("string").alias("__payload"))
 

@@ -77,6 +77,7 @@ from pyspark.sql import functions as F
 from benthos_spark.bloblang import map_text
 from benthos_spark.bloblang.compiler import Scope, compile_expr
 from benthos_spark.bloblang.parser import parse_query
+from benthos_spark.datamodel import row_payload
 
 
 class ConfigError(ValueError):
@@ -1536,8 +1537,7 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
                 "defined (add it under resources.caches)")
         from benthos_spark.bloblang.field import interpolate
         key = interpolate(str(spec.get("key", "${!count:items}")))
-        body = (F.col("content") if "content" in df.columns
-                else F.to_json(F.struct(*df.columns)))
+        body = row_payload(df)
         store.set(df.select(key.cast("string").alias(store.key),
                             body.cast("string").alias("value")))
         return df
@@ -1584,9 +1584,7 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
         # drained or timeout.  Bounded request/reply surface by
         # contract (the reference holds the same per-process queue)
         from benthos_spark.sources.http_ingest import serve_http_output
-        body = (F.col("content") if "content" in df.columns
-                else F.to_json(F.struct(*df.columns)))
-        msgs = [r[0] or "" for r in df.select(body).collect()]
+        msgs = [r[0] or "" for r in df.select(row_payload(df)).collect()]
         addr = str(spec.get("address", "127.0.0.1:0"))
         host, port = addr.rsplit(":", 1)
         _, _, left = serve_http_output(
@@ -1604,9 +1602,7 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
         import subprocess as _sp
         if not spec.get("name"):
             raise ConfigError("subprocess output needs a command `name`")
-        body = (F.col("content") if "content" in df.columns
-                else F.to_json(F.struct(*df.columns)))
-        lines = [r[0] or "" for r in df.select(body).collect()]
+        lines = [r[0] or "" for r in df.select(row_payload(df)).collect()]
         proc = _sp.run([str(spec["name"]), *[str(a) for a in
                                              spec.get("args", [])]],
                        input="\n".join(lines) + ("\n" if lines else ""),
@@ -1627,15 +1623,13 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
         if not address:
             raise ConfigError("socket output needs `address`")
         network = str(spec.get("network", "tcp"))
-        body = (F.col("content") if "content" in df.columns
-                else F.to_json(F.struct(*df.columns)))
-        payload = "".join((r[0] or "") + "\n"
-                          for r in df.select(body).collect())
+        text = "".join((r[0] or "") + "\n"
+                       for r in df.select(row_payload(df)).collect())
         if network == "udp":
             host, port = address.rsplit(":", 1)
             s = _sk.socket(_sk.AF_INET, _sk.SOCK_DGRAM)
             try:
-                for line in payload.splitlines():
+                for line in text.splitlines():
                     s.sendto((line + "\n").encode(), (host, int(port)))
             finally:
                 s.close()
@@ -1647,7 +1641,7 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
                 host, port = address.rsplit(":", 1)
                 s = _sk.create_connection((host, int(port)), timeout=10)
             try:
-                s.sendall(payload.encode())
+                s.sendall(text.encode())
             finally:
                 s.close()
         else:
@@ -1674,12 +1668,9 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
         from benthos_spark.operators.http_enrich import http_enrich
         if not spec.get("url"):
             raise ConfigError("http_client output needs `url`")
-        body = (F.col("content") if "content" in df.columns
-                else F.to_json(F.struct(*[
-                    F.col(c) for c in df.columns if c != "_error"])))
         sent = http_enrich(
             df, F.lit(str(spec["url"])), alias="__http_resp",
-            method=str(spec.get("verb", "POST")), body_col=body,
+            method=str(spec.get("verb", "POST")), body_col=row_payload(df),
             headers=spec.get("headers"),
             timeout_s=float(spec.get("timeout", 10)),
             retries=int(spec.get("retries", 2)))
@@ -1727,10 +1718,8 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
             if msgs:
                 websocket_send(url, msgs)
 
-        cols = df.select(content_col) if content_col in df.columns \
-            else df.select(F.to_json(F.struct(*df.columns))
-                           .alias(content_col))
-        cols.foreachPartition(send_part)
+        df.select(row_payload(df, content_col).alias(content_col)) \
+            .foreachPartition(send_part)
         return df
     from benthos_spark.sinks.bus import DOC_STORE_FAMILIES
     if kind in DOC_STORE_FAMILIES:
@@ -1754,34 +1743,12 @@ def _run_output(df: DataFrame, conf: dict | None, ctx: dict | None = None):
     if kind == "mongodb":
         # mongodb output (internal/impl/mongodb/output.go): the
         # processor's write operations with the result discarded
-        from benthos_spark.operators.control import resource
-        from benthos_spark.operators.kv_store import mongodb_map
         op = str(spec.get("operation", "insert-one"))
         if op in ("insert-one", "replace-one", "update-one") \
                 and not spec.get("document_map"):
             raise ConfigError(f"mongodb output {op} needs `document_map`")
-        factory = (resource(str(spec["client_resource"]))
-                   if spec.get("client_resource") else None)
-        work, helpers = df, []
-        f_col = d_col = None
-        if spec.get("filter_map"):
-            work = _mapping_json_col(work, str(spec["filter_map"]),
-                                     "__mongo_filter")
-            f_col = F.col("__mongo_filter")
-            helpers.append("__mongo_filter")
-        if spec.get("document_map"):
-            work = _mapping_json_col(work, str(spec["document_map"]),
-                                     "__mongo_doc")
-            d_col = F.col("__mongo_doc")
-            helpers.append("__mongo_doc")
-        out = mongodb_map(
-            work, str(spec.get("operation", "insert-one")),
-            str(spec.get("database", "db")),
-            str(spec.get("collection", "coll")),
-            filter_col=f_col, document_col=d_col,
-            upsert=bool(spec.get("upsert", False)),
-            client_factory=factory, url=str(spec.get("url", "")))
-        out.write.format("noop").mode("overwrite").save()
+        _apply_processor(df, {"mongodb": {**spec, "operation": op}}, ctx) \
+            .write.format("noop").mode("overwrite").save()
         return df
     if kind == "sql":
         # sql output (lib/output/sql.go): INSERT per message through

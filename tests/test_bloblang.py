@@ -251,11 +251,12 @@ def test_number_coercion_and_catch(spark):
 
 def test_identity_root_keeps_runtime_errors(spark):
     """`root = this` copies `_error` as a field; a failing method still
-    flags the row, as with explicit field assignments."""
+    flags the row, as with explicit field assignments, and its error
+    replaces an earlier one (FlagErr)."""
     df = rows(spark, [(1, "3", None), (2, "zz", None), (3, "zz", "earlier")],
               "id INT, s STRING, _error STRING")
     want = {1: (3.0, None), 2: (None, ".number(): expected number value"),
-            3: (None, "earlier")}
+            3: (None, ".number(): expected number value")}
     for src in ("root = this\nroot.n = this.s.number()",
                 "root.id = this.id\nroot.n = this.s.number()"):
         out = map_text(df, src, keep=("_error",))

@@ -49,11 +49,13 @@ def test_meta_set_get(spark):
     assert row2.a == "9"
 
 
-def test_with_error_first_wins(spark):
+def test_with_error_new_error_replaces_old(spark):
+    """FlagErr (lib/processor/util.go) overwrites the flag key: the
+    later error is the one a part carries."""
     msgs = rows_to_messages(spark, [{"content": "x"}])
     flagged = with_error(msgs, F.lit(True), "first")
     flagged = with_error(flagged, F.lit(True), "second")
-    assert flagged.collect()[0]._error == "first"
+    assert flagged.collect()[0]._error == "second"
     assert flagged.select(errored().alias("e")).collect()[0].e is True
 
 

@@ -22,10 +22,6 @@ import os
 
 import pytest
 
-# Soak/parity tier: excluded from the default fast run the driver's
-# verify budget can finish (pytest.ini); run with -m slow.
-pytestmark = __import__('pytest').mark.slow
-
 VECTORS = os.path.join(os.path.dirname(__file__), "golden",
                        "ref_executor_cases.json")
 

@@ -12,10 +12,6 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Soak/parity tier: excluded from the default fast run the driver's
-# verify budget can finish (pytest.ini); run with -m slow.
-pytestmark = __import__('pytest').mark.slow
-
 VECTORS = os.path.join(os.path.dirname(__file__), "golden",
                        "ref_processor_cases.json")
 
